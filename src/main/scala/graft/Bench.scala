@@ -20,7 +20,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Graft.envCores
     // Contention guard: a bench recorded while sbt (or anything else) has
     // the box busy overstates per-query cost 1.5-6× (round-3 evidence:
     // the recorded artifact showed 494 s wall for a 185 s bench, and every
@@ -33,28 +33,7 @@ object Bench {
         f"[bench] WARNING: load average $startLoad%.1f at start — numbers " +
           "will be contention-inflated; re-run on an idle box " +
           "(NEVER bench while sbt test/compile runs)")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pinned like Verify/PlanDump: timestamp semantics must not depend
-      // on host tz or on whether an events-based query ran first
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The two-pass structure runs ~300 queries between a query's two
-      // samples; the default 100-entry codegen cache evicts every plan's
-      // generated classes in between, so BOTH samples would pay Janino
-      // recompilation (~0.1-0.3 s/query, measured +45% on the suite).
-      // Size the cache to hold the whole suite and pass 2 runs warm.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // Let AQE re-partition CACHED plans (off by default for plan-reuse
-      // compatibility only): a persisted iterative frame otherwise
-      // materializes at the static shuffle-partition count and every
-      // downstream pass re-reads it at that width regardless of size —
-      // scale-adaptive in BOTH directions (guide §2.2: size-based
-      // partitioning), not a local[32] tune; measured text_unigram_sweep
-      // 1923 → 97 tasks, 5.2 → 3.5 s at sf0.1.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
+    val spark = Graft.localSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Warm the JVM (classloading, codegen, shuffle machinery) so the first
     // timed query doesn't absorb session startup.

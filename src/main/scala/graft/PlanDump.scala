@@ -8,6 +8,10 @@ import java.nio.file.{Files, Paths}
   * the hot paths stay in whole-stage codegen.
   *
   * Usage: runMain graft.PlanDump [sfDir] [outFile]
+  *
+  * List mode, for before/after plan evidence of single queries:
+  * `runMain graft.PlanDump <q1,q2,...> <outDir> <suffix> [sfDir]` writes
+  * `<outDir>/<query>_<suffix>.txt`, each the query's PLANS.md section.
   */
 object PlanDump {
 
@@ -194,48 +198,66 @@ object PlanDump {
     "text_bpe_bytes", "text_bpe_bytes_fertility", "text_unigram_refresh",
     "text_unigram_forget")
 
-  def main(args: Array[String]): Unit = {
+  /** One query's section: its formatted physical plan plus every staged
+    * (pre-cut) executed plan its construction captured.
+    */
+  private def section(spark: SparkSession, sfDir: String, name: String,
+                      heading: String): (String, Int) = {
+    val df = SparkEntry.queries(name)(spark, sfDir)
+    val plan = df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+    val sb = new StringBuilder(s"## $heading\n\n```\n$plan```\n")
+    val staged = org.apache.spark.sql.graft.PlanBridge.drainStagedPlans()
+    staged.zipWithIndex.foreach { case ((site, p), i) =>
+      sb.append(s"\n### $name — staged plan ${i + 1} (pre-cut at $site)\n\n```\n$p```\n")
+    }
+    (sb.toString, staged.size)
+  }
+
+  def main(argv: Array[String]): Unit = {
+    // list mode takes three leading arguments; the rest parse as usual
+    val (list, args) =
+      if (argv.length >= 3) (Some(argv.take(3)), argv.drop(3)) else (None, argv)
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // fixed local[4], not the host's cores: the shuffle-partition count is
+    // printed in every plan, so the dump must not depend on the machine
+    val spark = Graft.localSession(4)
     spark.sparkContext.setLogLevel("ERROR")
-
-    val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of the headline queries\n\n")
-    sb.append(s"Generated by `graft.PlanDump` on `$sfDir`. Things to check per\n")
-    sb.append("plan: `PushedFilters` non-empty where a predicate exists, `ReadSchema`\n")
-    sb.append("restricted to referenced columns, `BroadcastHashJoin` on dim joins,\n")
-    sb.append("`TakeOrderedAndProject` for global top-k, codegen (`*(n)`) spans wide.\n")
-    sb.append("Queries that stage through `PlanBridge.cutLineage` register a post-cut\n")
-    sb.append("`Scan ExistingRDD` — their PRE-CUT executed stages are dumped beneath\n")
-    sb.append("them as `### <name> — staged plan N` sections (same audit surface the\n")
-    sb.append("BNLJ boundedness spec traverses), so no section's only node is an\n")
-    sb.append("opaque RDD leaf.\n")
-
     // staged-plan capture: cuts run at query CONSTRUCTION (iterative
     // trainers execute eagerly), and fingerprint-keyed model memos mean a
     // cut runs only on first construction — this is a fresh JVM, so every
     // memoized trainer's stages land under the first query that builds it
     org.apache.spark.sql.graft.PlanBridge.captureStagedPlans.set(true)
-    var stagedCount = 0
-    Headline.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $name\n\n```\n$plan```\n")
-      val stagedPlans = org.apache.spark.sql.graft.PlanBridge.drainStagedPlans()
-      stagedPlans.zipWithIndex.foreach { case ((site, p), i) =>
-        stagedCount += 1
-        sb.append(s"\n### $name — staged plan ${i + 1} (pre-cut at $site)\n\n```\n$p```\n")
-      }
+    list match {
+      case Some(Array(names, outDir, suffix)) =>
+        new java.io.File(outDir).mkdirs()
+        names.split(',').foreach { name =>
+          val out = s"$outDir/${name}_$suffix.txt"
+          Files.writeString(Paths.get(out), section(spark, sfDir, name, s"$name ($suffix)")._1)
+          println(s"[plandump] wrote $out")
+        }
+      case _ =>
+        val out = args.lift(1).getOrElse("PLANS.md")
+        val sb = new StringBuilder
+        sb.append("# PLANS — formatted physical plans of the headline queries\n\n")
+        sb.append(s"Generated by `graft.PlanDump` on `$sfDir`. Things to check per\n")
+        sb.append("plan: `PushedFilters` non-empty where a predicate exists, `ReadSchema`\n")
+        sb.append("restricted to referenced columns, `BroadcastHashJoin` on dim joins,\n")
+        sb.append("`TakeOrderedAndProject` for global top-k, codegen (`*(n)`) spans wide.\n")
+        sb.append("Queries that stage through `PlanBridge.cutLineage` register a post-cut\n")
+        sb.append("`Scan ExistingRDD` — their PRE-CUT executed stages are dumped beneath\n")
+        sb.append("them as `### <name> — staged plan N` sections (same audit surface the\n")
+        sb.append("BNLJ boundedness spec traverses), so no section's only node is an\n")
+        sb.append("opaque RDD leaf.\n")
+        var stagedCount = 0
+        Headline.foreach { name =>
+          val (text, staged) = section(spark, sfDir, name, name)
+          sb.append("\n").append(text)
+          stagedCount += staged
+        }
+        Files.writeString(Paths.get(out), sb.toString)
+        println(s"[plandump] wrote ${Headline.length} plans (+$stagedCount staged) to $out")
     }
-    Files.writeString(Paths.get(out), sb.toString)
-    println(s"[plandump] wrote ${Headline.length} plans (+$stagedCount staged) to $out")
     spark.stop()
   }
 }

@@ -99,13 +99,7 @@ object ScaleProbe {
     // other probes' block-manager and GC residue)
     val sections = Set("cc", "ccab", "inc", "bpe", "gd", "pairs", "cdc", "lpa", "sfx", "prefix", "rrf", "kcore", "ivf", "ivfappend", "forget", "rerank", "kcoreinc", "annwave", "unigramzone", "script", "unigramfold").filter(args.contains)
     def on(s: String): Boolean = sections.isEmpty || sections(s)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.localSession(Graft.envCores)
     spark.sparkContext.setLogLevel("WARN")
 
     def solveStats(name: String, edges: DataFrame, nodes: Long, nEdges: Long): Unit = {

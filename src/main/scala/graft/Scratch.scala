@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query timing harness (dev tool, not part of the driver
   * contract): `runMain graft.Scratch <query_name>` times one registered
   * query 3× at SPARK_GRAFT_SF_DIR — the fast loop for optimizing one
@@ -15,23 +13,8 @@ import org.apache.spark.sql.SparkSession
 object Scratch {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pinned like Verify/Bench: timestamp semantics must not depend on
-      // host tz or on whether an events-based query ran first
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Bench's codegen-cache sizing: composed queries (forget_audit,
-      // the refinery chains) generate hundreds of codegen units per run,
-      // and the default 100-entry cache thrashes — measured forget_audit
-      // 9.6 s here vs 3.5 s in Bench on the same box purely from Janino
-      // recompilation, which made Scratch-vs-Bench numbers incomparable
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // mirror Bench: AQE may re-partition cached plans (see Bench.scala)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
+    val cpus = Graft.envCores
+    val spark = Graft.localSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("id % 97 AS k", "id AS v")
       .groupBy("k").count().count()

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.graft.VectorBridge
 
 /** Public API for the native vector expressions (implementation in
@@ -75,7 +75,4 @@ object VectorExpressions {
     */
   def suffix_lcp(w1: Column, p1: Column, w2: Column, p2: Column): Column =
     VectorBridge.suffixLcp(w1, p1, w2, p2)
-
-  /** Register `graft_dot` / `graft_cosine` for spark.sql. */
-  def register(spark: SparkSession): Unit = VectorBridge.register(spark)
 }

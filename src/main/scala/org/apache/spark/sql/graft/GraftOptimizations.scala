@@ -1,7 +1,6 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -25,9 +24,8 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, IntegerType, LongType
   * fuzzy-join stage gets the ~k/n DP cut without hand-tuning. The rewrite
   * fires only for non-negative integer literals on the right.
   *
-  * Install per session (`GraftOptimizations.install(spark)`, idempotent)
-  * or for every session via
-  * `--conf spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions`.
+  * Installed per session by `graft.Graft.install` (idempotent), which
+  * `graft.Graft.localSession` calls.
   */
 object BandLevenshteinRule extends Rule[LogicalPlan] {
 
@@ -187,25 +185,5 @@ object GraftOptimizations {
     val missing = rules.filterNot(current.contains)
     if (missing.nonEmpty)
       spark.experimental.extraOptimizations = current ++ missing
-  }
-}
-
-/** Builder-time form: `.config("spark.sql.extensions", classOf[GraftExtensions].getName)`.
-  * Registers the optimizer rules, the native as-of join planner strategy,
-  * and the `graft_*` SQL functions (so a pure-SQL user of a session
-  * configured with the extension can call the codegen'd vector/ngram
-  * kernels without any Scala import).
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftOptimizations.rules.foreach(r => ext.injectOptimizerRule(_ => r))
-    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    VectorBridge.sqlFunctions.foreach { case (name, builder) =>
-      ext.injectFunction((
-        new org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          "org.apache.spark.sql.graft.VectorBridge", name),
-        builder))
-    }
   }
 }

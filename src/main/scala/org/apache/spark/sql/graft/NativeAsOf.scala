@@ -12,9 +12,8 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Native sorted-merge AS-OF JOIN — the whole-operator extension point
   * (SURVEY §1.4 / builder-brief preference order (c)): a custom
-  * `LogicalPlan` + `SparkStrategy` + `SparkPlan`, registered via
-  * `SparkSessionExtensions` (`GraftExtensions`) or per-session
-  * (`NativeAsOf.install`).
+  * `LogicalPlan` + `SparkStrategy` + `SparkPlan`, registered per session
+  * on first use (`NativeAsOf.install`, called by `joinLeftAsOf`).
   *
   * Semantics (identical to `graft.operators.AsOf.joinLeftAsOf`, which is
   * the builtin-only formulation it is A/B-tested against): for every left

@@ -452,8 +452,8 @@ object VectorBridge {
       new org.apache.spark.sql.catalyst.expressions.IntegralDivide(
         ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
 
-  /** The SQL-callable surface, shared by both registration paths
-    * (live-session [[register]] and builder-time `GraftExtensions`).
+  /** The SQL-callable surface, registered on a live session by
+    * [[register]] (through `graft.Graft.install`).
     */
   val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_dot"    -> (exprs => DotProduct(exprs(0), exprs(1))),

@@ -11,32 +11,42 @@ class GraftOptimizationsSpec extends SparkSpec {
   private def fixture = graft.Tables.customer(spark, sf0001)
   private val probe = "Customer#000000042"
 
+  /** Evaluates `body` with the engine's rules excluded from every optimizer
+    * batch: the builtin baseline each A/B compares against, scoped so the
+    * shared session keeps its rules for every other suite.
+    */
+  private def builtin[T](body: => T): T = {
+    val key = "spark.sql.optimizer.excludedRules"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, GraftOptimizations.rules.map(_.ruleName).mkString(","))
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("levenshtein <= k is rewritten to the banded kernel, results unchanged") {
     val df = fixture
     def keys(q: org.apache.spark.sql.DataFrame): Set[Long] =
       q.select("c_custkey").collect().map(_.getLong(0)).toSet
-    val unbanded = keys(df.filter(levenshtein(col("c_name"), lit(probe)) <= 2))
+    val unbanded = builtin {
+      val q = df.filter(levenshtein(col("c_name"), lit(probe)) <= 2)
+      assert(!q.queryExecution.optimizedPlan.toString.contains("Some(2)) >= 0"))
+      keys(q)
+    }
     assert(unbanded.nonEmpty)
 
-    GraftOptimizations.install(spark)
-    try {
-      val q = df.filter(levenshtein(col("c_name"), lit(probe)) <= 2)
-      val optimized = q.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("Some(2)) >= 0"),
-        s"expected banded 3-arg levenshtein in:\n$optimized")
-      assert(keys(q) === unbanded)
+    val q = df.filter(levenshtein(col("c_name"), lit(probe)) <= 2)
+    val optimized = q.queryExecution.optimizedPlan.toString
+    assert(optimized.contains("Some(2)) >= 0"),
+      s"expected banded 3-arg levenshtein in:\n$optimized")
+    assert(keys(q) === unbanded)
 
-      // strict < and reversed comparisons band too
-      val lt = df.filter(levenshtein(col("c_name"), lit(probe)) < 3)
-      assert(lt.queryExecution.optimizedPlan.toString.contains("Some(2)) >= 0"))
-      assert(keys(lt) === unbanded)
+    // strict < and reversed comparisons band too
+    val lt = df.filter(levenshtein(col("c_name"), lit(probe)) < 3)
+    assert(lt.queryExecution.optimizedPlan.toString.contains("Some(2)) >= 0"))
+    assert(keys(lt) === unbanded)
 
-      val rev = df.filter(lit(2) >= levenshtein(col("c_name"), lit(probe)))
-      assert(keys(rev) === unbanded)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(GraftOptimizations.rules.contains)
-    }
+    val rev = df.filter(lit(2) >= levenshtein(col("c_name"), lit(probe)))
+    assert(keys(rev) === unbanded)
   }
 
   test("size(array_intersect) on sorted-distinct longs rewrites to the merge count") {
@@ -48,25 +58,23 @@ class GraftOptimizationsSpec extends SparkSpec {
       "sort_array(array_distinct(sequence(c_custkey % 11, c_custkey % 11 + 6))) AS b")
     def counts(q: org.apache.spark.sql.DataFrame): Map[Long, Int] =
       q.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val builtin = counts(df.selectExpr("c_custkey", "size(array_intersect(a, b)) AS c"))
-    assert(builtin.values.exists(_ > 0))
-
-    GraftOptimizations.install(spark)
-    try {
+    val base = builtin {
       val q = df.selectExpr("c_custkey", "size(array_intersect(a, b)) AS c")
-      val optimized = q.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("graft_intersect_count"),
-        s"expected merge-count rewrite in:\n$optimized")
-      assert(counts(q) === builtin)
-
-      // unproven sortedness (plain array construction) must NOT rewrite
-      val bare = df.selectExpr(
-        "size(array_intersect(array(c_custkey % 7, c_custkey % 7 + 1), a)) AS c")
-      assert(!bare.queryExecution.optimizedPlan.toString.contains("graft_intersect_count"))
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(GraftOptimizations.rules.contains)
+      assert(!q.queryExecution.optimizedPlan.toString.contains("graft_intersect_count"))
+      counts(q)
     }
+    assert(base.values.exists(_ > 0))
+
+    val q = df.selectExpr("c_custkey", "size(array_intersect(a, b)) AS c")
+    val optimized = q.queryExecution.optimizedPlan.toString
+    assert(optimized.contains("graft_intersect_count"),
+      s"expected merge-count rewrite in:\n$optimized")
+    assert(counts(q) === base)
+
+    // unproven sortedness (plain array construction) must NOT rewrite
+    val bare = df.selectExpr(
+      "size(array_intersect(array(c_custkey % 7, c_custkey % 7 + 1), a)) AS c")
+    assert(!bare.queryExecution.optimizedPlan.toString.contains("graft_intersect_count"))
   }
 
   test("the builtin bigram idiom rewrites to the adjacent-pairs kernel, names and errors preserved") {
@@ -80,30 +88,27 @@ class GraftOptimizationsSpec extends SparkSpec {
       .selectExpr("split(text, ' ') AS w")
       .filter(size(col("w")) >= 2)
       .selectExpr(s"explode($bigramExpr) AS p")
-    val builtin = pairs(query)
-    assert(builtin.nonEmpty)
-
-    GraftOptimizations.install(spark)
-    try {
-      val q = query
-      val optimized = q.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("graft_array_adjacent_pairs"),
-        s"expected adjacent-pairs rewrite in:\n$optimized")
-      // the user's field names survive the rewrite (p.wa / p.wb resolved)
-      assert(pairs(q) === builtin)
-      // the one-word error path is PRESERVED: without the size guard a
-      // single-word text drives element_at(w, 0), which must still error
-      // after the rewrite (the size-guard falls through to the
-      // original chain)
-      import spark.implicits._
-      val oneWord = Seq("solo").toDF("text").selectExpr("split(text, ' ') AS w")
-        .selectExpr(s"explode($bigramExpr) AS p")
-      assert(oneWord.queryExecution.optimizedPlan.toString.contains("graft_array_adjacent_pairs"))
-      intercept[Exception] { oneWord.collect() }
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(GraftOptimizations.rules.contains)
+    val base = builtin {
+      assert(!query.queryExecution.optimizedPlan.toString.contains("graft_array_adjacent_pairs"))
+      pairs(query)
     }
+    assert(base.nonEmpty)
+
+    val q = query
+    val optimized = q.queryExecution.optimizedPlan.toString
+    assert(optimized.contains("graft_array_adjacent_pairs"),
+      s"expected adjacent-pairs rewrite in:\n$optimized")
+    // the user's field names survive the rewrite (p.wa / p.wb resolved)
+    assert(pairs(q) === base)
+    // the one-word error path is PRESERVED: without the size guard a
+    // single-word text drives element_at(w, 0), which must still error
+    // after the rewrite (the size-guard falls through to the
+    // original chain)
+    import spark.implicits._
+    val oneWord = Seq("solo").toDF("text").selectExpr("split(text, ' ') AS w")
+      .selectExpr(s"explode($bigramExpr) AS p")
+    assert(oneWord.queryExecution.optimizedPlan.toString.contains("graft_array_adjacent_pairs"))
+    intercept[Exception] { oneWord.collect() }
   }
 
   test("adjacent-pairs rewrite is structurally idempotent across plan copies") {
@@ -137,13 +142,8 @@ class GraftOptimizationsSpec extends SparkSpec {
   test("install is idempotent") {
     GraftOptimizations.install(spark)
     GraftOptimizations.install(spark)
-    try {
-      val n = spark.experimental.extraOptimizations
-        .count(GraftOptimizations.rules.contains)
-      assert(n === GraftOptimizations.rules.size)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(GraftOptimizations.rules.contains)
-    }
+    val n = spark.experimental.extraOptimizations
+      .count(GraftOptimizations.rules.contains)
+    assert(n === GraftOptimizations.rules.size)
   }
 }

@@ -93,7 +93,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("SQL registration: graft_cosine callable from spark.sql") {
-    VectorExpressions.register(spark)
     spark.read.parquet(s"$sf0001/embeddings.parquet").limit(3)
       .createOrReplaceTempView("emb_t")
     val r = spark.sql("SELECT graft_cosine(embedding, embedding) AS c FROM emb_t")
@@ -102,7 +101,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("SQL registration: graft_word_ngrams60 + graft_simhash60 compose in spark.sql") {
-    VectorExpressions.register(spark)
     spark.read.parquet(s"$sf0001/documents.parquet").limit(5)
       .createOrReplaceTempView("docs_t")
     val viaSql = spark.sql(
@@ -117,7 +115,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("SQL registration: the adjacent-pairs family callable from spark.sql") {
-    VectorExpressions.register(spark)
     val r = spark.sql(
       "SELECT graft_word_pairs('a b c') AS wp, " +
         "graft_token_pairs('|a||b||c|') AS tp, " +

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** The lossy half of the JPEG tier — everything the DuckDB oracle
   * CANNOT see, pinned with measured margins instead: `mm_jpeg_meta` /
@@ -28,13 +28,14 @@ import org.scalatest.funsuite.AnyFunSuite
   *     just unobserved.
   *
   * Pure-JVM driver-side loops on purpose: the bounds are codec facts,
-  * not plan facts, and the id range tested (0..1998, every third id —
-  * the image rows' generator space at sf0.01 scale) exceeds what the
-  * oracled queries read at correctness SF.
+  * not plan facts. The id range tested (0..1998, every third id — the
+  * image rows' generator space at sf0.01 scale) must cover what the
+  * oracled queries read at correctness SF; the last test asserts that.
   */
-class JpegSpec extends AnyFunSuite {
+class JpegSpec extends SparkSpec {
 
-  private val ids: Seq[Long] = 0L until 1998L by 3
+  private val idEnd = 1998L
+  private val ids: Seq[Long] = 0L until idEnd by 3
 
   private def encode(ids: Seq[Long], q: Float): Seq[Multimodal.JpegPayload] =
     Multimodal.encodeJpegPartition(ids.map(id => (id, id)).iterator, q).toSeq
@@ -133,5 +134,17 @@ class JpegSpec extends AnyFunSuite {
     info(s"min cross-id decoded aHash Hamming over ${decoded.length} ids: $minHam")
     assert(falseMerges === 0,
       s"$falseMerges distinct-id pairs passed the mm_jpeg_dedup verify")
+  }
+
+  test("the oracled SFs' image ids stay inside the separation-tested range") {
+    // the image rows are the documents' doc_ids (every third), so a corpus
+    // regeneration that grows doc_id past the range would oracle ids the
+    // separation test above never saw
+    Seq("sf0.001", "sf0.01").foreach { sf =>
+      val dir = new java.io.File(new java.io.File(sf0001).getParentFile, sf)
+      val maxId = spark.read.parquet(s"$dir/documents.parquet")
+        .agg(org.apache.spark.sql.functions.max("doc_id")).head().getLong(0)
+      assert(maxId < idEnd, s"$sf: max doc_id $maxId reaches the tested range end $idEnd")
+    }
   }
 }

@@ -10,7 +10,7 @@
 #
 # Usage: tools/gate.sh [verify_sf_dir] [bench_sf_dir]
 #   defaults: /root/testdata/sf0.01  /root/testdata/sf0.1
-# Env: SPARK_GRAFT_CPUS (default 8), GATE_SKIP_BENCH=1 to stop after selfcheck.
+# Env: SPARK_GRAFT_CPUS (default: nproc), GATE_SKIP_BENCH=1 to stop after selfcheck.
 set -u
 # pipefail: the Bench pipeline below ends in grep/tee — without it, a
 # Bench run that prints its metric line and then CRASHES mid-teardown
@@ -20,7 +20,7 @@ cd "$(dirname "$0")/.."
 
 VERIFY_SF="${1:-/root/testdata/sf0.01}"
 BENCH_SF="${2:-/root/testdata/sf0.1}"
-CPUS="${SPARK_GRAFT_CPUS:-8}"
+CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
 OUT="$(mktemp -d /tmp/graft_gate.XXXXXX)"
 FAIL=0
 
