@@ -445,84 +445,81 @@ object Dedup extends QueryModule {
 
   private def lshSweepOver(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.graft.PlanBridge
-    // NOT thread-overlapped (r14 session-4 A/B): materializing the two
-    // independent cuts from driver futures (the forget_audit §2.6
-    // discipline) measured NEUTRAL here — warm min-of-3 2.25 → 2.21 s —
-    // because the signature cut is a fraction of the PPJoin truth cut's
-    // cost, so there is nothing for it to back-fill; reverted per the
+    // NOT overlapped (r14 session-4 A/B): materializing the two
+    // independent cuts from driver threads (PlanBridge.scoped's overlap)
+    // measured NEUTRAL here — warm min-of-3 2.25 → 2.21 s — because the
+    // signature cut is a fraction of the PPJoin truth cut's cost, so
+    // there is nothing for it to back-fill; reverted per the
     // only-where-measured rule.
-    val (sig, sigRdd, _) = PlanBridge.cutLineage(
-      shingled(docs).select(col("doc_id"),
-        graft.functions.VectorExpressions
-          .minhash_signature(col("s"), Hashing.MinhashParams, Hashing.MinhashP)
-          .as("mh")))
-    val (truth, truthRdd, _) = PlanBridge.cutLineage(
-      jaccardPairsOf(docs, t = 0.5).select("doc_a", "doc_b"))
-    val nTrue = truth.agg(count(lit(1)).as("n_true"))
-    val configs = Seq(1 -> 16, 2 -> 8, 4 -> 4, 8 -> 2, 16 -> 1)
-    // CFG-COLUMNED single chain (r14, the ksweep discipline, guide §2.4):
-    // all five (bands × rows) splits ride one literal cfg column (= b,
-    // unique per config) through ONE band explode, ONE join-key-pinned
-    // shared exchange (both self-join sides co-partitioned — the
-    // simhash_pairs discipline), ONE distinct and per-cfg aggregates —
-    // instead of five unioned branches each paying its own explode,
-    // self-join exchanges and scalar aggregates. Per-config band keys and
-    // pair sets are untouched: cfg rides every join and group key.
-    val bandStructs = configs.flatMap { case (b, r) =>
-      (0 until b).map { bi =>
-        struct(lit(b).as("cfg"), lit(bi).as("band"),
-          concat_ws("-", (0 until r).map(ri =>
-            element_at(col("mh"), bi * r + ri + 1).cast("string")): _*)
-            .as("band_key"))
+    PlanBridge.scoped(docs.sparkSession) { s =>
+      val sig = s.cut(
+        shingled(docs).select(col("doc_id"),
+          graft.functions.VectorExpressions
+            .minhash_signature(col("s"), Hashing.MinhashParams, Hashing.MinhashP)
+            .as("mh")))
+      val truth = s.cut(jaccardPairsOf(docs, t = 0.5).select("doc_a", "doc_b"))
+      val nTrue = truth.agg(count(lit(1)).as("n_true"))
+      val configs = Seq(1 -> 16, 2 -> 8, 4 -> 4, 8 -> 2, 16 -> 1)
+      // CFG-COLUMNED single chain (r14, the ksweep discipline, guide §2.4):
+      // all five (bands × rows) splits ride one literal cfg column (= b,
+      // unique per config) through ONE band explode, ONE join-key-pinned
+      // shared exchange (both self-join sides co-partitioned — the
+      // simhash_pairs discipline), ONE distinct and per-cfg aggregates —
+      // instead of five unioned branches each paying its own explode,
+      // self-join exchanges and scalar aggregates. Per-config band keys and
+      // pair sets are untouched: cfg rides every join and group key.
+      val bandStructs = configs.flatMap { case (b, r) =>
+        (0 until b).map { bi =>
+          struct(lit(b).as("cfg"), lit(bi).as("band"),
+            concat_ws("-", (0 until r).map(ri =>
+              element_at(col("mh"), bi * r + ri + 1).cast("string")): _*)
+              .as("band_key"))
+        }
       }
+      val bands = sig
+        .select(col("doc_id"), explode(array(bandStructs: _*)).as("bk"))
+        .select(col("doc_id"), col("bk.cfg").as("cfg"), col("bk.band").as("band"),
+          col("bk.band_key").as("band_key"))
+        .repartition(col("cfg"), col("band"), col("band_key"))
+      val cand = bands.as("x").join(bands.as("y"),
+          col("x.cfg") === col("y.cfg") && col("x.band") === col("y.band") &&
+          col("x.band_key") === col("y.band_key") &&
+          col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.cfg").as("cfg"),
+          col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+        .distinct()
+      val nCand = cand.groupBy("cfg").agg(count(lit(1)).as("n_cand"))
+      // per-cfg hits: cand is distinct per (cfg, pair), so the inner join
+      // counts each truth pair once per cfg that surfaced it — exactly the
+      // per-config left_semi count the unioned form computed
+      val nHit = truth.join(cand, Seq("doc_a", "doc_b"))
+        .groupBy("cfg").agg(count(lit(1)).as("n_hit"))
+      // the config list rides the 1-row n_true frame so a config with ZERO
+      // candidates still emits its row (the unioned form's n_cand = 0 row)
+      val cfgRows = nTrue.select(col("n_true"), explode(expr(
+          "array(" + configs.map { case (b, r) =>
+            s"named_struct('bands', $b, 'rows_per_band', $r)" }.mkString(",") +
+          ")")).as("c"))
+        .select(col("c.bands").as("bands"), col("c.rows_per_band").as("rows_per_band"),
+          col("n_true"))
+      cfgRows
+        .join(broadcast(nCand), col("bands") === nCand("cfg"), "left").drop("cfg")
+        .join(broadcast(nHit), col("bands") === nHit("cfg"), "left").drop("cfg")
+        .select(col("bands"), col("rows_per_band"),
+          coalesce(col("n_cand"), lit(0L)).as("n_cand"), col("n_true"),
+          coalesce(col("n_hit"), lit(0L)).as("n_hit"))
+        .select(col("bands"), col("rows_per_band"),
+          col("n_cand"), col("n_true"), col("n_hit"),
+          // degenerate-corpus guards on BOTH ratios (mirrored in the
+          // oracle): zero truth pairs / zero candidates would otherwise
+          // diverge silently (Spark NULL) vs loudly (DuckDB) — the same
+          // class, so the same CASE on both engines
+          expr("CASE WHEN n_true = 0 THEN CAST(0.0 AS DOUBLE) " +
+            "ELSE round(CAST(n_hit AS DOUBLE) / n_true, 4) END").as("recall"),
+          expr("CASE WHEN n_cand = 0 THEN CAST(0 AS BIGINT) " +
+            "ELSE n_hit * 1000000 div n_cand END").as("hit_per_cand_ppm"))
+        .orderBy("bands")
     }
-    val bands = sig
-      .select(col("doc_id"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.cfg").as("cfg"), col("bk.band").as("band"),
-        col("bk.band_key").as("band_key"))
-      .repartition(col("cfg"), col("band"), col("band_key"))
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.cfg") === col("y.cfg") && col("x.band") === col("y.band") &&
-        col("x.band_key") === col("y.band_key") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.cfg").as("cfg"),
-        col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    val nCand = cand.groupBy("cfg").agg(count(lit(1)).as("n_cand"))
-    // per-cfg hits: cand is distinct per (cfg, pair), so the inner join
-    // counts each truth pair once per cfg that surfaced it — exactly the
-    // per-config left_semi count the unioned form computed
-    val nHit = truth.join(cand, Seq("doc_a", "doc_b"))
-      .groupBy("cfg").agg(count(lit(1)).as("n_hit"))
-    // the config list rides the 1-row n_true frame so a config with ZERO
-    // candidates still emits its row (the unioned form's n_cand = 0 row)
-    val cfgRows = nTrue.select(col("n_true"), explode(expr(
-        "array(" + configs.map { case (b, r) =>
-          s"named_struct('bands', $b, 'rows_per_band', $r)" }.mkString(",") +
-        ")")).as("c"))
-      .select(col("c.bands").as("bands"), col("c.rows_per_band").as("rows_per_band"),
-        col("n_true"))
-    val out = cfgRows
-      .join(broadcast(nCand), col("bands") === nCand("cfg"), "left").drop("cfg")
-      .join(broadcast(nHit), col("bands") === nHit("cfg"), "left").drop("cfg")
-      .select(col("bands"), col("rows_per_band"),
-        coalesce(col("n_cand"), lit(0L)).as("n_cand"), col("n_true"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"))
-      .select(col("bands"), col("rows_per_band"),
-        col("n_cand"), col("n_true"), col("n_hit"),
-        // degenerate-corpus guards on BOTH ratios (mirrored in the
-        // oracle): zero truth pairs / zero candidates would otherwise
-        // diverge silently (Spark NULL) vs loudly (DuckDB) — the same
-        // class, so the same CASE on both engines
-        expr("CASE WHEN n_true = 0 THEN CAST(0.0 AS DOUBLE) " +
-          "ELSE round(CAST(n_hit AS DOUBLE) / n_true, 4) END").as("recall"),
-        expr("CASE WHEN n_cand = 0 THEN CAST(0 AS BIGINT) " +
-          "ELSE n_hit * 1000000 div n_cand END").as("hit_per_cand_ppm"))
-      .orderBy("bands")
-    val (res, _, _) = PlanBridge.cutLineage(out)
-    PlanBridge.releaseCut(sigRdd)
-    PlanBridge.releaseCut(truthRdd)
-    res
   }
 
   /** MinHash as an ESTIMATOR, calibrated against its own ground truth:

@@ -5,6 +5,7 @@ import graft.functions.Hashing
 import graft.operators.ConnectedComponents
 import graft.queries.Ml
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graft.{CutScope, PlanBridge}
 import org.apache.spark.sql.functions._
 
 /** Right-to-be-forgotten delete propagation — the takedown cascade a
@@ -199,77 +200,60 @@ object Forget extends QueryModule {
     */
   private[llm] def forgetPackOver(
       spark: SparkSession, sfDir: String, del0: DataFrame): DataFrame = {
-    // §2.6 overlap (the forget_audit / refinery discipline): the cascade's
-    // loser solve — PPJoin pair cut + two component closures, all EAGER at
-    // construction — runs in a driver future while the main thread
-    // materializes the gate ∘ ¬deleted survivor base behind its own
-    // lineage cut (narrow (doc_id, lang, n_words) rows). Same set algebra
-    // as before: survivors = (gated ∖ deleted) ∖ losers; only the
-    // materialization overlaps.
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val del = del0.select("doc_id")
-    val fLosers = scala.concurrent.Future { forgetLosersOver(spark, sfDir, del) }
-    val (base, baseRdd, _) = org.apache.spark.sql.graft.PlanBridge.cutLineage(
-      Refinery.gatedDocs(spark, sfDir)
-        .join(del, Seq("doc_id"), "left_anti")
-        .select("doc_id", "lang", "n_words"))
-    val (losers, _, release) = scala.concurrent.Await.result(
-      fLosers, scala.concurrent.duration.Duration.Inf)
-    val survivors = base.join(losers, Seq("doc_id"), "left_anti")
-    val out = Sampling.cumBeforeByLang(
-        survivors.select(col("doc_id"), col("lang"), col("n_words").as("toks")))
-      .withColumn("bin", expr(s"cum_before div ${Sampling.PackBudget}"))
-      .groupBy("lang", "bin")
-      .agg(count(lit(1)).as("n_docs"), sum(col("toks")).as("bin_tokens"))
-      .orderBy("lang", "bin")
-    // consume through one final cut (bins are lang×bin-sized), then
-    // drop the pinned pair and base blocks — the releaseCut discipline
-    val (res, _, _) = org.apache.spark.sql.graft.PlanBridge.cutLineage(out)
-    release()
-    org.apache.spark.sql.graft.PlanBridge.releaseCut(baseRdd)
-    res
+    // overlap (PlanBridge.scoped): the eager loser solve runs in a branch
+    // while the caller cuts the narrow gate ∘ ¬deleted survivor base
+    PlanBridge.scoped(spark) { s =>
+      val del = del0.select("doc_id")
+      val (base, (losers, _)) = s.overlap(
+        s.cut(Refinery.gatedDocs(spark, sfDir)
+          .join(del, Seq("doc_id"), "left_anti")
+          .select("doc_id", "lang", "n_words")),
+        forgetLosersOver(s, spark, sfDir, del))
+      val survivors = base.join(losers, Seq("doc_id"), "left_anti")
+      Sampling.cumBeforeByLang(
+          survivors.select(col("doc_id"), col("lang"), col("n_words").as("toks")))
+        .withColumn("bin", expr(s"cum_before div ${Sampling.PackBudget}"))
+        .groupBy("lang", "bin")
+        .agg(count(lit(1)).as("n_docs"), sum(col("toks")).as("bin_tokens"))
+        .orderBy("lang", "bin")
+    }
   }
 
   /** The cascade's shared core: (survivors, full-corpus cluster
-    * labeling, release). Exposing the labeling lets [[forgetAudit]]
-    * derive its 'before' frame from the SAME PPJoin + components pass
-    * the survivor cut already pays (advisor-caught: the audit used to
-    * re-run both via `Dedup.dedupClusters` — the exact duplication the
-    * "ONE PPJoin pass" note below forbids, hidden from the PlanSpec
-    * shingle-kernel guard behind the lineage cuts). `release()` drops
-    * the pinned pair blocks; callers consume their outputs through a
-    * final cut (or collect) first — repeated invocations in one session
-    * (bench loops, pack + audit in one run) otherwise accumulate
-    * persisted blocks until a GC happens.
+    * labeling). Exposing the labeling lets [[forgetAudit]] derive its
+    * 'before' frame from the SAME PPJoin + components pass the survivor
+    * cut already pays (advisor-caught: the audit used to re-run both via
+    * `Dedup.dedupClusters` — the exact duplication the "ONE PPJoin pass"
+    * note below forbids, hidden from the PlanSpec shingle-kernel guard
+    * behind the lineage cuts). The pair cut is released with scope `s`.
     */
   private[llm] def forgetCascadeOver(
-      spark: SparkSession, sfDir: String, del0: DataFrame)
-      : (DataFrame, DataFrame, () => Unit) = {
+      s: CutScope, spark: SparkSession, sfDir: String, del0: DataFrame)
+      : (DataFrame, DataFrame) = {
     val del = del0.select("doc_id")
-    val (losers, cl, release) = forgetLosersOver(spark, sfDir, del)
+    val (losers, cl) = forgetLosersOver(s, spark, sfDir, del)
     val survivors = Refinery.gatedDocs(spark, sfDir)
       .join(del, Seq("doc_id"), "left_anti")
       .join(losers, Seq("doc_id"), "left_anti")
-    (survivors, cl, release)
+    (survivors, cl)
   }
 
   /** The cascade's LOSER half — everything up to (standing ∪ re-solved)
     * cluster losers, the part that is eager at construction: split out of
     * [[forgetCascadeOver]] so [[forgetPackOver]] can overlap it with its
-    * survivor-base cut (guide §2.6) while [[forgetAudit]] keeps consuming
+    * survivor-base cut while [[forgetAudit]] keeps consuming
     * the composed survivors via [[forgetCascadeOver]] unchanged.
     */
   private[llm] def forgetLosersOver(
-      spark: SparkSession, sfDir: String, del: DataFrame)
-      : (DataFrame, DataFrame, () => Unit) = {
+      s: CutScope, spark: SparkSession, sfDir: String, del: DataFrame)
+      : (DataFrame, DataFrame) = {
     // ONE PPJoin pass: materialize the verified pair set behind a lineage
     // cut and derive the standing cluster labeling, the affected-cluster
     // retained edges, AND the audit's before-frame from it (calling
     // dedupClusters AND jaccardPairs re-ran the candidate+verify
     // self-join twice — review-caught; ReuseExchange shares the shingled
     // scan, not the join work).
-    val (pairs, pairsRdd, _) = org.apache.spark.sql.graft.PlanBridge.cutLineage(
+    val pairs = s.cut(
       Dedup.jaccardPairs(spark, sfDir, t = 0.8)
         .select(col("doc_a").as("a"), col("doc_b").as("b")))
     val cl = ConnectedComponents.components(pairs)
@@ -289,8 +273,7 @@ object Forget extends QueryModule {
     val newLosers = ConnectedComponents.components(affEdges)
       .filter(col("node") =!= col("component"))
       .select(col("node").as("doc_id"))
-    (standingLosers.union(newLosers), cl,
-      () => org.apache.spark.sql.graft.PlanBridge.releaseCut(pairsRdd))
+    (standingLosers.union(newLosers), cl)
   }
 
   // ---------------------------------------------------------- forget_spans
@@ -403,65 +386,40 @@ object Forget extends QueryModule {
   def forgetAudit(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
     val del = deletedOf(docs)
-    // The THREE independent sub-solves over (docs, del) overlap from
-    // driver threads (guide §2.6): block-graph requalify (two component
-    // solves), the jaccard cascade (PPJoin cut + two component solves),
-    // and — since r14 session 4 — the span-support recount, materialized
-    // behind its own lineage cut. The spans chain was previously lazy
-    // and ran SERIALLY inside the final metrics action, after both
-    // futures had drained (measured: the final job carried the whole
-    // gram-explode recount while 31 cores idled); cutting it in a third
-    // future overlaps that work with the component solves and leaves the
-    // final action aggregating three small cut frames. Each solve's
-    // single-task local-finish stages and driver round-trips back-fill
-    // the others', locally and at cluster scale alike. The construction
-    // paths are thread-safe (curateModelMemo is a TrieMap, the
-    // staged-plan queue is concurrent, localStar state is task-local);
-    // results are unchanged — the SAME frames are built, only their
-    // materialization overlaps.
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val fRequal = scala.concurrent.Future { requalifyOver(docs, del) }
-    val fCascade = scala.concurrent.Future { forgetCascadeOver(spark, sfDir, del) }
-    val fSpans = scala.concurrent.Future {
-      org.apache.spark.sql.graft.PlanBridge.cutLineage(
-        requalifySpansOver(docs, del))
+    // THREE independent sub-solves overlap (PlanBridge.scoped): the span
+    // recount behind its own cut, block-graph requalify and the jaccard
+    // cascade. Left lazy, the spans chain ran SERIALLY inside the final
+    // action (measured: the gram-explode recount while 31 cores idled).
+    PlanBridge.scoped(spark) { s =>
+      val (spans, requal, (after, cl)) = s.overlap(
+        s.cut(requalifySpansOver(docs, del)),
+        requalifyOver(docs, del),
+        forgetCascadeOver(s, spark, sfDir, del))
+      // the before-frame's loser set comes from the SAME labeling the
+      // cascade core computed — one PPJoin + one full-corpus components
+      // pass serve both sides of the audit (advisor-caught: this used to
+      // re-run both via Dedup.dedupClusters behind the lineage cut)
+      val before = Refinery.gatedDocs(spark, sfDir)
+        .join(cl.filter(!col("canonical")).select("doc_id"),
+          Seq("doc_id"), "left_anti")
+      def one(metric: String, df: DataFrame, v: Column): DataFrame =
+        df.agg(v.cast("long").as("value")).select(lit(metric).as("metric"), col("value"))
+      // counts, not sums-of-flags: an EMPTY blast radius must read 0 in
+      // both engines (Spark's sum over zero rows is NULL, COUNT(*) is 0 —
+      // the review-caught divergence); the words total coalesces for the
+      // same reason, mirrored in the oracle
+      one("deleted_docs", del, count(lit(1)))
+        .unionByName(one("readmitted_docs", requal,
+          count(when(col("readmitted"), lit(1)))))
+        .unionByName(one("span_affected_docs", spans, count(lit(1))))
+        .unionByName(one("span_words_restored", spans,
+          coalesce(sum(col("words_restored")), lit(0L))))
+        .unionByName(one("kept_docs_before", before, count(lit(1))))
+        .unionByName(one("kept_tokens_before", before, sum(col("n_words"))))
+        .unionByName(one("kept_docs_after", after, count(lit(1))))
+        .unionByName(one("kept_tokens_after", after, sum(col("n_words"))))
+        .orderBy("metric")
     }
-    val (spans, spansRdd, _) =
-      scala.concurrent.Await.result(fSpans, scala.concurrent.duration.Duration.Inf)
-    val requal =
-      scala.concurrent.Await.result(fRequal, scala.concurrent.duration.Duration.Inf)
-    // the before-frame's loser set comes from the SAME labeling the
-    // cascade core computed — one PPJoin + one full-corpus components
-    // pass serve both sides of the audit (advisor-caught: this used to
-    // re-run both via Dedup.dedupClusters behind the lineage cut)
-    val (after, cl, release) =
-      scala.concurrent.Await.result(fCascade, scala.concurrent.duration.Duration.Inf)
-    val before = Refinery.gatedDocs(spark, sfDir)
-      .join(cl.filter(!col("canonical")).select("doc_id"),
-        Seq("doc_id"), "left_anti")
-    def one(metric: String, df: DataFrame, v: Column): DataFrame =
-      df.agg(v.cast("long").as("value")).select(lit(metric).as("metric"), col("value"))
-    // counts, not sums-of-flags: an EMPTY blast radius must read 0 in
-    // both engines (Spark's sum over zero rows is NULL, COUNT(*) is 0 —
-    // the review-caught divergence); the words total coalesces for the
-    // same reason, mirrored in the oracle
-    val metrics = one("deleted_docs", del, count(lit(1)))
-      .unionByName(one("readmitted_docs", requal,
-        count(when(col("readmitted"), lit(1)))))
-      .unionByName(one("span_affected_docs", spans, count(lit(1))))
-      .unionByName(one("span_words_restored", spans,
-        coalesce(sum(col("words_restored")), lit(0L))))
-      .unionByName(one("kept_docs_before", before, count(lit(1))))
-      .unionByName(one("kept_tokens_before", before, sum(col("n_words"))))
-      .unionByName(one("kept_docs_after", after, count(lit(1))))
-      .unionByName(one("kept_tokens_after", after, sum(col("n_words"))))
-      .orderBy("metric")
-    // eight scalar rows: cut, then drop the pinned pair and span blocks
-    val (res, _, _) = org.apache.spark.sql.graft.PlanBridge.cutLineage(metrics)
-    release()
-    org.apache.spark.sql.graft.PlanBridge.releaseCut(spansRdd)
-    res
   }
 
   // ----------------------------------------------------- forget_gate_drift

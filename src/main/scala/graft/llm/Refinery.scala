@@ -4,6 +4,7 @@ import graft.{QueryModule, Tables}
 import graft.functions.Hashing
 import graft.queries.Ml
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.functions._
 
 /** THE REFINERY PASS — the end-to-end composition a training-data
@@ -90,44 +91,22 @@ object Refinery extends QueryModule {
   def refineryPack(spark: SparkSession, sfDir: String): DataFrame =
     maskAndPack(spark, sfDir, gatedDocs(spark, sfDir))
 
-  /** §2.6 overlap harness shared by every refinery variant whose loser
-    * solve is EAGER at construction (ConnectedComponents / aHash cluster
-    * closures materialize per-round lineage cuts): the solve used to
-    * finish BEFORE the final action's survivor-base stages could start —
-    * ~10 driver-sequential single-task jobs at bench SF with 31 cores
-    * idle, a straggler tail at cluster scale. Here the solve runs in a
-    * driver future while the main thread materializes the survivor BASE
-    * behind its own lineage cut — a corpus-NARROW (doc_id, lang, n_words)
-    * projection, trading one narrow write for re-scanning document text
-    * in the final action — and a third future warms the spans memo
-    * (instant when already built; overlaps the suffix sort on cold runs).
-    * Results are unchanged: the same frames are built, only their
-    * materialization overlaps (the forget_audit discipline, r14 items
-    * 10/18). The bounded result is materialized through a final cut so
-    * the base blocks release before return — the forget_pack releaseCut
-    * discipline. Interleaved A/B at sf0.1 (min-of-3-rounds, HEAD vs this):
-    * refinery_full 2.34 → 1.68 s, serve_order 2.61 → 1.74,
-    * serve_resume 2.78 → 1.78.
+  /** [[PlanBridge.scoped]] overlap for every refinery variant whose loser
+    * solve is eager: the solve runs in a branch while the caller cuts the
+    * corpus-NARROW (doc_id, lang, n_words) survivor base, and a third
+    * branch warms the spans memo. Interleaved A/B at sf0.1 (min-of-3,
+    * serial vs overlapped): refinery_full 2.34 → 1.68 s, serve_order
+    * 2.61 → 1.74, serve_resume 2.78 → 1.78.
     */
   private def overlapEagerLosers(
       spark: SparkSession, sfDir: String,
       losersSolve: () => DataFrame, base: => DataFrame)(
-      tail: DataFrame => DataFrame): DataFrame = {
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val fLosers = scala.concurrent.Future { losersSolve() }
-    val fSpans = scala.concurrent.Future {
-      SuffixDedup.dupSpansExact(spark, sfDir)
+      tail: DataFrame => DataFrame): DataFrame =
+    PlanBridge.scoped(spark) { s =>
+      val (b, losers, _) = s.overlap(
+        s.cut(base), losersSolve(), SuffixDedup.dupSpansExact(spark, sfDir))
+      tail(b.join(losers, Seq("doc_id"), "left_anti"))
     }
-    val (b, bRdd, _) = org.apache.spark.sql.graft.PlanBridge.cutLineage(base)
-    val losers = scala.concurrent.Await.result(
-      fLosers, scala.concurrent.duration.Duration.Inf)
-    scala.concurrent.Await.result(fSpans, scala.concurrent.duration.Duration.Inf)
-    val (res, _, _) = org.apache.spark.sql.graft.PlanBridge.cutLineage(
-      tail(b.join(losers, Seq("doc_id"), "left_anti")))
-    org.apache.spark.sql.graft.PlanBridge.releaseCut(bRdd)
-    res
-  }
 
   /** The near-dup cluster losers ([[Dedup.dedupClusters]]' non-canonical
     * members) — the eager component solve three refinery variants drop.
@@ -193,47 +172,35 @@ object Refinery extends QueryModule {
     * the price of one.
     */
   def refineryWaterfall(spark: SparkSession, sfDir: String): DataFrame = {
-    // §2.6 overlap (see [[overlapEagerLosers]]): the eager cluster solve
-    // runs in a driver future while the main thread cuts the stage-2
-    // (gate ∘ decontaminate) frame — the narrow (doc_id, nw) projection
-    // stages 2-4 read. Stages 0-1 recompute their own scans INSIDE the
-    // final action, where AQE schedules them concurrently with the cut
-    // read-offs. Same rows, same stage arithmetic; only materialization
-    // order changes.
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val fLosers = scala.concurrent.Future { clusterLosers(spark, sfDir) }
-    val fSpans = scala.concurrent.Future {
-      SuffixDedup.dupSpansExact(spark, sfDir)
+    // overlap (see [[overlapEagerLosers]]): the cluster solve runs in a
+    // branch while the caller cuts the narrow stage-2 (doc_id, nw) frame;
+    // stages 0-1 recompute their scans inside the final action.
+    PlanBridge.scoped(spark) { s =>
+      // lazy: first forced in the caller's branch, so a cold gate-model
+      // fit overlaps the solves too
+      lazy val gated = gatedDocs(spark, sfDir).select(col("doc_id"), col("n_words").as("nw"))
+      val (decon, losers, _) = s.overlap(
+        s.cut(gated.join(Curation.decontaminate(Tables.documents(spark, sfDir))
+          .select("doc_id"), Seq("doc_id"), "left_semi")),
+        clusterLosers(spark, sfDir), SuffixDedup.dupSpansExact(spark, sfDir))
+      val raw = Tables.documents(spark, sfDir)
+        .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("nw"))
+      val deduped = decon.join(losers, Seq("doc_id"), "left_anti")
+      val cut = SuffixDedup.dupSpansExact(spark, sfDir)
+        .groupBy("doc_id").agg(sum(col("span_words")).as("cut_words"))
+      val masked = deduped.join(cut, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          (col("nw") - coalesce(col("cut_words"), lit(0L))).as("nw"))
+      def stage(i: Int, name: String, df: DataFrame): DataFrame =
+        df.agg(count(lit(1)).as("n_docs"),
+            coalesce(sum(col("nw")), lit(0L)).as("tokens"))
+          .select(lit(i).as("stage"), lit(name).as("stage_name"),
+            col("n_docs"), col("tokens"))
+      Seq(stage(0, "raw", raw), stage(1, "gate", gated),
+          stage(2, "decontaminate", decon), stage(3, "dedup", deduped),
+          stage(4, "mask", masked))
+        .reduce(_.unionAll(_)).orderBy("stage")
     }
-    val raw = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("nw"))
-    val gated = gatedDocs(spark, sfDir).select(col("doc_id"), col("n_words").as("nw"))
-    val clean = Curation.decontaminate(Tables.documents(spark, sfDir))
-      .select("doc_id")
-    val (decon, deconRdd, _) = org.apache.spark.sql.graft.PlanBridge.cutLineage(
-      gated.join(clean, Seq("doc_id"), "left_semi"))
-    val losers = scala.concurrent.Await.result(
-      fLosers, scala.concurrent.duration.Duration.Inf)
-    scala.concurrent.Await.result(fSpans, scala.concurrent.duration.Duration.Inf)
-    val deduped = decon.join(losers, Seq("doc_id"), "left_anti")
-    val cut = SuffixDedup.dupSpansExact(spark, sfDir)
-      .groupBy("doc_id").agg(sum(col("span_words")).as("cut_words"))
-    val masked = deduped.join(cut, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        (col("nw") - coalesce(col("cut_words"), lit(0L))).as("nw"))
-    def stage(i: Int, name: String, df: DataFrame): DataFrame =
-      df.agg(count(lit(1)).as("n_docs"),
-          coalesce(sum(col("nw")), lit(0L)).as("tokens"))
-        .select(lit(i).as("stage"), lit(name).as("stage_name"),
-          col("n_docs"), col("tokens"))
-    val out = Seq(stage(0, "raw", raw), stage(1, "gate", gated),
-        stage(2, "decontaminate", decon), stage(3, "dedup", deduped),
-        stage(4, "mask", masked))
-      .reduce(_.unionAll(_)).orderBy("stage")
-    val (res, _, _) = org.apache.spark.sql.graft.PlanBridge.cutLineage(out)
-    org.apache.spark.sql.graft.PlanBridge.releaseCut(deconRdd)
-    res
   }
 
   /** gate ∘ IMAGE-cluster-representative dedup ∘ mask ∘ pack — the

@@ -3,6 +3,7 @@ package graft.llm
 import graft.{QueryModule, Tables}
 import graft.operators.BlockedRank
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -135,147 +136,135 @@ object SuffixDedup extends QueryModule {
         dupSpansExactOf(Tables.documents(spark, sfDir)))
     }
 
-  private[graft] def dupSpansExactOf(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graft.PlanBridge
+  private[graft] def dupSpansExactOf(docs: DataFrame): DataFrame =
+    PlanBridge.scoped(docs.sparkSession) { s =>
+      // ---- 1. duplicated-doc subset (the only full-corpus passes)
+      val grams = docs.select(col("doc_id"),
+        explode(graft.functions.VectorExpressions
+          .word_ngram_hashes(col("text"), MinSpan, distinct = false)).as("g"))
+      val dupG = grams.groupBy("g").agg(count(lit(1)).as("occ"))
+        .filter(col("occ") >= 2).select("g")
+      val dupDocs = grams.join(dupG, "g").select("doc_id").distinct()
+      // cut: `sub` feeds the position explode, the word-array join (twice)
+      // and the doc-length frame — without a cut each reference re-runs the
+      // gram prune
+      val sub = s.cut(
+        docs.join(dupDocs, Seq("doc_id"), "left_semi")
+          .select(col("doc_id"), split(col("text"), " ").as("w")))
 
-    // ---- 1. duplicated-doc subset (the only full-corpus passes)
-    val grams = docs.select(col("doc_id"),
-      explode(graft.functions.VectorExpressions
-        .word_ngram_hashes(col("text"), MinSpan, distinct = false)).as("g"))
-    val dupG = grams.groupBy("g").agg(count(lit(1)).as("occ"))
-      .filter(col("occ") >= 2).select("g")
-    val dupDocs = grams.join(dupG, "g").select("doc_id").distinct()
-    // cut: `sub` feeds the position explode, the word-array join (twice)
-    // and the doc-length frame — without a cut each reference re-runs the
-    // gram prune
-    val (sub, subRdd, _) = PlanBridge.cutLineage(
-      docs.join(dupDocs, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), split(col("text"), " ").as("w")))
+      // longest doc in the subset bounds the doubling depth — ONE scalar
+      // driver action (the CC-loop bounded-actions discipline)
+      val maxLen = sub.agg(coalesce(max(size(col("w"))), lit(0)))
+        .collect()(0).getInt(0).toLong
 
-    // longest doc in the subset bounds the doubling depth — ONE scalar
-    // driver action (the CC-loop bounded-actions discipline)
-    val maxLen = sub.agg(coalesce(max(size(col("w"))), lit(0)))
-      .collect()(0).getInt(0).toLong
-
-    // ---- 2. prefix-doubling suffix order, from a WIDTH-8 BASE: the
-    // round-0 key is the suffix's first 8 words as an array (Spark array
-    // ordering is element-wise with shorter-prefix-first — the same
-    // end-marker-smallest convention), so the loop starts at len=8 and
-    // skips three single-word doubling rounds; the base key ships 8 words
-    // per position ONCE, cheaper than the three ranking rounds it
-    // replaces.
-    val BaseWidth = 8
-    val pos0 = sub
-      .select(col("doc_id"), col("w"), posexplode(col("w")))
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("p"),
-        expr(s"slice(w, pos + 1, $BaseWidth)").as("key"))
-    val keyRanks = BlockedRank.blockedPrefix(
-      pos0.select("key").distinct(),
-      partition = Nil,
-      blocks = Seq(("__b", substring(element_at(col("key"), 1), 1, 2))),
-      blockDesc = Seq(false),
-      localOrder = Seq(col("key")),
-      outRank = "r", outTotalN = "__nt").drop("__nt")
-    var (cur, curRdd, curN) = PlanBridge.cutLineage(
-      pos0.join(keyRanks, "key").select(col("doc_id"), col("p"), col("r")))
-    // composite needs max(input rank); the fixpoint check needs the
-    // distinct-rank count — one scalar agg per round over the fresh cut
-    def maxR(df: DataFrame): Long =
-      if (curN == 0) 0L
-      else df.agg(coalesce(max(col("r")), lit(0L))).collect()(0).getLong(0)
-    var k = maxR(cur) // densified: max == distinct-rank count
-    var len = BaseWidth.toLong
-    var fixpoint = curN == k // every suffix already distinct
-    while (len < maxLen && !fixpoint) {
-      // composite step: order-preserving injection, no ranking. Cut
-      // eagerly — the frame feeds BOTH the densify branch and the final
-      // join-back, and without a cut each branch re-runs the positions
-      // self-join.
-      val shifted = cur.select(col("doc_id"), (col("p") - len).as("p"), col("r").as("r2"))
-      val (composite, compRdd, _) = PlanBridge.cutLineage(
-        compositeRank(cur.join(shifted, Seq("doc_id", "p"), "left"), k))
-      PlanBridge.releaseCut(curRdd)
-      len *= 2
-      if (len >= maxLen) {
-        // final round: the composite order IS the suffix order — no
-        // densify needed, values need not stay small
-        cur = composite; curRdd = compRdd
-        fixpoint = true
-      } else {
-        // densify: collapse back under K so the NEXT composite stays in
-        // long range, and read the fixpoint off the rank count
-        val ranked = BlockedRank.blockedPrefix(
-          composite.select(col("r").as("r1")).distinct(),
-          partition = Nil,
-          blocks = Seq(("__b", expr("r1 div 1024"))),
-          blockDesc = Seq(false),
-          localOrder = Seq(col("r1")),
-          outRank = "nr", outTotalN = "__nt").drop("__nt")
-        val (nxt, nxtRdd, _) = PlanBridge.cutLineage(
-          composite.join(ranked, col("r") === col("r1"))
-            .select(col("doc_id"), col("p"), col("nr").as("r")))
-        PlanBridge.releaseCut(compRdd)
-        cur = nxt; curRdd = nxtRdd
-        val k2 = maxR(cur)
-        fixpoint = k2 == k || k2 == curN // no split, or all distinct
-        k = k2
+      // ---- 2. prefix-doubling suffix order, from a WIDTH-8 BASE: the
+      // round-0 key is the suffix's first 8 words as an array (Spark array
+      // ordering is element-wise with shorter-prefix-first — the same
+      // end-marker-smallest convention), so the loop starts at len=8 and
+      // skips three single-word doubling rounds; the base key ships 8 words
+      // per position ONCE, cheaper than the three ranking rounds it
+      // replaces.
+      val BaseWidth = 8
+      val pos0 = sub
+        .select(col("doc_id"), col("w"), posexplode(col("w")))
+        .select(col("doc_id"), (col("pos") + 1).cast("long").as("p"),
+          expr(s"slice(w, pos + 1, $BaseWidth)").as("key"))
+      val keyRanks = BlockedRank.blockedPrefix(
+        pos0.select("key").distinct(),
+        partition = Nil,
+        blocks = Seq(("__b", substring(element_at(col("key"), 1), 1, 2))),
+        blockDesc = Seq(false),
+        localOrder = Seq(col("key")),
+        outRank = "r", outTotalN = "__nt").drop("__nt")
+      var (cur, curRdd, curN) = PlanBridge.cutLineage(
+        pos0.join(keyRanks, "key").select(col("doc_id"), col("p"), col("r")))
+      // composite needs max(input rank); the fixpoint check needs the
+      // distinct-rank count — one scalar agg per round over the fresh cut
+      def maxR(df: DataFrame): Long =
+        if (curN == 0) 0L
+        else df.agg(coalesce(max(col("r")), lit(0L))).collect()(0).getLong(0)
+      var k = maxR(cur) // densified: max == distinct-rank count
+      var len = BaseWidth.toLong
+      var fixpoint = curN == k // every suffix already distinct
+      while (len < maxLen && !fixpoint) {
+        // composite step: order-preserving injection, no ranking. Cut
+        // eagerly — the frame feeds BOTH the densify branch and the final
+        // join-back, and without a cut each branch re-runs the positions
+        // self-join.
+        val shifted = cur.select(col("doc_id"), (col("p") - len).as("p"), col("r").as("r2"))
+        val (composite, compRdd, _) = PlanBridge.cutLineage(
+          compositeRank(cur.join(shifted, Seq("doc_id", "p"), "left"), k))
+        PlanBridge.releaseCut(curRdd)
+        len *= 2
+        if (len >= maxLen) {
+          // final round: the composite order IS the suffix order — no
+          // densify needed, values need not stay small
+          cur = composite; curRdd = compRdd
+          fixpoint = true
+        } else {
+          // densify: collapse back under K so the NEXT composite stays in
+          // long range, and read the fixpoint off the rank count
+          val ranked = BlockedRank.blockedPrefix(
+            composite.select(col("r").as("r1")).distinct(),
+            partition = Nil,
+            blocks = Seq(("__b", expr("r1 div 1024"))),
+            blockDesc = Seq(false),
+            localOrder = Seq(col("r1")),
+            outRank = "nr", outTotalN = "__nt").drop("__nt")
+          val (nxt, nxtRdd, _) = PlanBridge.cutLineage(
+            composite.join(ranked, col("r") === col("r1"))
+              .select(col("doc_id"), col("p"), col("nr").as("r")))
+          PlanBridge.releaseCut(compRdd)
+          cur = nxt; curRdd = nxtRdd
+          val k2 = maxR(cur)
+          fixpoint = k2 == k || k2 == curN // no split, or all distinct
+          k = k2
+        }
       }
+
+      // ---- 3. suffix order → adjacent pairs → word-compare LCP
+      val saC = s.cut(BlockedRank.blockedPrefix(
+        cur,
+        partition = Nil,
+        blocks = Seq(("__b", expr("r div 1024"))),
+        blockDesc = Seq(false),
+        localOrder = Seq(col("r"), col("doc_id"), col("p")),
+        outRank = "sa", outTotalN = "__nt").drop("__nt", "r"))
+      // the final rank state is dead once the suffix order is cut
+      PlanBridge.releaseCut(curRdd)
+      val pairs = saC
+        .select(col("sa"), col("doc_id").as("d1"), col("p").as("p1"))
+        .join(saC.select((col("sa") - 1).as("sa"), col("doc_id").as("d2"),
+          col("p").as("p2")), "sa")
+        .join(sub.select(col("doc_id").as("d1"), col("w").as("w1")), "d1")
+        .join(sub.select(col("doc_id").as("d2"), col("w").as("w2")), "d2")
+        // true LCP: one fused early-exit word-compare (codegen'd native
+        // expression — the interpreted filter/sequence HOF form was 7 s of
+        // a 20 s pass at sf0.1); docs are bounded-length rows, and only
+        // the duplication-bounded adjacent pairs pay the scan
+        .withColumn("lcp", graft.functions.VectorExpressions
+          .suffix_lcp(col("w1"), col("p1"), col("w2"), col("p2")))
+        .select(col("d1"), col("p1"), col("d2"), col("p2"), col("lcp"))
+
+      // ---- 4. extension → threshold → interval merge
+      val spansRaw = pairs.select(col("d1").as("doc_id"), col("p1").as("p"), col("lcp"))
+        .union(pairs.select(col("d2").as("doc_id"), col("p2").as("p"), col("lcp")))
+        .groupBy("doc_id", "p").agg(max(col("lcp")).as("ext"))
+        .filter(col("ext") >= MinSpan)
+        .select(col("doc_id"), col("p").as("s"), (col("p") + col("ext") - 1).as("e"))
+      val byStart = Window.partitionBy("doc_id").orderBy("s")
+      val prevMax = max(col("e")).over(byStart.rowsBetween(Window.unboundedPreceding, -1))
+      spansRaw
+        .withColumn("brk",
+          when(col("s") > coalesce(prevMax, lit(-1L)) + 1, 1L).otherwise(0L))
+        .withColumn("island",
+          sum(col("brk")).over(byStart.rowsBetween(Window.unboundedPreceding, 0)))
+        .groupBy("doc_id", "island")
+        .agg(min(col("s")).as("span_start"), max(col("e")).as("span_end"))
+        .select(col("doc_id"), col("span_start"), col("span_end"),
+          (col("span_end") - col("span_start") + 1).as("span_words"))
+        .orderBy("doc_id", "span_start")
     }
-
-    // ---- 3. suffix order → adjacent pairs → word-compare LCP
-    val (saC, saRdd, _) = PlanBridge.cutLineage(BlockedRank.blockedPrefix(
-      cur,
-      partition = Nil,
-      blocks = Seq(("__b", expr("r div 1024"))),
-      blockDesc = Seq(false),
-      localOrder = Seq(col("r"), col("doc_id"), col("p")),
-      outRank = "sa", outTotalN = "__nt").drop("__nt", "r"))
-    val pairs = saC
-      .select(col("sa"), col("doc_id").as("d1"), col("p").as("p1"))
-      .join(saC.select((col("sa") - 1).as("sa"), col("doc_id").as("d2"),
-        col("p").as("p2")), "sa")
-      .join(sub.select(col("doc_id").as("d1"), col("w").as("w1")), "d1")
-      .join(sub.select(col("doc_id").as("d2"), col("w").as("w2")), "d2")
-      // true LCP: one fused early-exit word-compare (codegen'd native
-      // expression — the interpreted filter/sequence HOF form was 7 s of
-      // a 20 s pass at sf0.1); docs are bounded-length rows, and only
-      // the duplication-bounded adjacent pairs pay the scan
-      .withColumn("lcp", graft.functions.VectorExpressions
-        .suffix_lcp(col("w1"), col("p1"), col("w2"), col("p2")))
-      .select(col("d1"), col("p1"), col("d2"), col("p2"), col("lcp"))
-
-    // ---- 4. extension → threshold → interval merge
-    val spansRaw = pairs.select(col("d1").as("doc_id"), col("p1").as("p"), col("lcp"))
-      .union(pairs.select(col("d2").as("doc_id"), col("p2").as("p"), col("lcp")))
-      .groupBy("doc_id", "p").agg(max(col("lcp")).as("ext"))
-      .filter(col("ext") >= MinSpan)
-      .select(col("doc_id"), col("p").as("s"), (col("p") + col("ext") - 1).as("e"))
-    val byStart = Window.partitionBy("doc_id").orderBy("s")
-    val prevMax = max(col("e")).over(byStart.rowsBetween(Window.unboundedPreceding, -1))
-    val out = spansRaw
-      .withColumn("brk",
-        when(col("s") > coalesce(prevMax, lit(-1L)) + 1, 1L).otherwise(0L))
-      .withColumn("island",
-        sum(col("brk")).over(byStart.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy("doc_id", "island")
-      .agg(min(col("s")).as("span_start"), max(col("e")).as("span_end"))
-      .select(col("doc_id"), col("span_start"), col("span_end"),
-        (col("span_end") - col("span_start") + 1).as("span_words"))
-      .orderBy("doc_id", "span_start")
-
-    // Materialize the result into its own cut, then release every
-    // intermediate (the final rank state and suffix order are dead once
-    // the LCPs are folded in; leaving them pinned would stack one
-    // positions-sized block set per invocation for the session).
-    val (res, resRdd, _) = PlanBridge.cutLineage(out)
-    PlanBridge.releaseCut(curRdd)
-    PlanBridge.releaseCut(saRdd)
-    PlanBridge.releaseCut(subRdd)
-    // resRdd stays pinned backing the returned frame (the one-shot-query
-    // contract shared with the CC queries; the ContextCleaner reclaims it
-    // once the frame is unreferenced).
-    res
-  }
 
   /** The exact-span report APPLIED — the remediation pass over the
     * suffix-grade extents (`Dedup.maskWithSpans` is the single shared

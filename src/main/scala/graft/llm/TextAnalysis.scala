@@ -651,24 +651,16 @@ object TextAnalysis extends QueryModule {
     // tercileScores measured a cut WORSE at its 2 branches; at 8 the
     // math flips — materializing one narrow 5-scalar-per-doc frame
     // replaces 8 recomputes of the explode + vocab-join chain.
-    // Measured at sf0.1: 5.5 s cutless → see SCRATCH_r8. Same
-    // one-shot-query release contract as SuffixDedup: the final 50-row
-    // result is cut, then the corpus-sized intermediate releases.
-    val (scored, scoredRdd, _) = org.apache.spark.sql.graft.PlanBridge.cutLineage(
-      lmScores(spark, sfDir).select("doc_id", "lang", "nll")
+    // Measured at sf0.1: 5.5 s cutless → see SCRATCH_r8.
+    org.apache.spark.sql.graft.PlanBridge.scoped(spark) { s =>
+      val scored = s.cut(lmScores(spark, sfDir).select("doc_id", "lang", "nll")
         .join(feat, "doc_id"))
-
-    val out = rrfTopK(scored)
-      .select(col("lang"), col("sel_rank").cast("long").as("sel_rank"),
-        col("doc_id"), col("r_nll"), col("r_ttr"), col("r_dom"),
-        col("rrf_nano"))
-      .orderBy("lang", "sel_rank")
-    // Materialize the bounded (10·langs-row) result, then release the
-    // corpus-sized scored cut; the result's own cut stays pinned backing
-    // the returned frame (ContextCleaner reclaims it once unreferenced).
-    val (res, _, _) = org.apache.spark.sql.graft.PlanBridge.cutLineage(out)
-    org.apache.spark.sql.graft.PlanBridge.releaseCut(scoredRdd)
-    res
+      rrfTopK(scored)
+        .select(col("lang"), col("sel_rank").cast("long").as("sel_rank"),
+          col("doc_id"), col("r_nll"), col("r_ttr"), col("r_dom"),
+          col("rrf_nano"))
+        .orderBy("lang", "sel_rank")
+    }
   }
 
   /** The RRF rank-and-select core over any (doc_id, lang, nll, ttr_ppm,

@@ -1,9 +1,14 @@
 package org.apache.spark.sql.graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.ThreadUtils
 
 /** Lineage cut for ITERATIVE dataframes that does NOT inherit the origin
   * plan's statistics.
@@ -83,7 +88,9 @@ object PlanBridge {
     // read-from-cache job per cut); without one — local dev, the driver's
     // verify/bench runs — behavior is unchanged.
     if (rdd.sparkContext.getCheckpointDir.isDefined) rdd.checkpoint()
-    val n = rdd.count() // eager materialization: the cut happens NOW
+    // eager materialization: the cut happens NOW. `persist` registered the
+    // RDD already: a failing count must release it, or it stays pinned.
+    val n = try rdd.count() catch { case t: Throwable => releaseCut(rdd); throw t }
     // capture AFTER the count: executedPlan is the final (post-AQE)
     // physical plan only once execution ran
     if (captureStagedPlans.get())
@@ -108,5 +115,92 @@ object PlanBridge {
       } catch { case scala.util.control.NonFatal(_) => () }
     }
     rdd.unpersist(blocking = false)
+  }
+
+  /** One lineage-cut lifecycle with driver-thread overlap (guide §2.6):
+    * `s.cut(df)` is [[cutLineage]] registered in the scope, `s.overlap`
+    * runs independent solves concurrently. The body's BOUNDED frame is
+    * materialized through one final cut (the returned frame); then every
+    * registered cut is released, on success and on failure.
+    *
+    * Overlap pays where solves are EAGER at construction (cluster
+    * closures, the PPJoin pair cut, the suffix-span memo): run serially,
+    * each solve's single-task stages and driver round-trips idle the
+    * other cores. The same frames are built; only materialization order
+    * changes, so construction paths must be thread-safe. Overlap only
+    * where an interleaved A/B measured a gain; each site cites its numbers.
+    */
+  def scoped(spark: SparkSession)(body: CutScope => DataFrame): DataFrame = {
+    val s = new CutScope(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
+    try cutLineage(body(s))._1 finally s.cuts.forEach(releaseCut(_))
+  }
+
+  /** Branch threads: cached, so a nested overlap never waits for a busy one. */
+  private[graft] lazy val pool = ThreadUtils.newDaemonCachedThreadPool("graft-overlap")
+}
+
+/** The handle [[PlanBridge.scoped]] passes its body. */
+final class CutScope private[graft] (
+    spark: org.apache.spark.sql.classic.SparkSession) {
+
+  /** On every job an [[overlap]] branch runs; cancelled on the first failure. */
+  val tag: String = s"graft-cut-scope-${java.util.UUID.randomUUID()}"
+  private[graft] val cuts = new ConcurrentLinkedQueue[RDD[_]]
+
+  /** [[PlanBridge.cutLineage]], released when the scope ends. */
+  def cut(df: DataFrame): DataFrame = {
+    val (f, rdd, _) = PlanBridge.cutLineage(df)
+    cuts.add(rdd)
+    f
+  }
+
+  /** Run `a` on the calling thread and the others on [[PlanBridge.pool]]
+    * through `SQLExecution.withThreadLocalCaptured`, so each branch sees
+    * the caller's job group, tags and session (a pool thread otherwise
+    * keeps those of the thread that created it). On the first failure the
+    * tag's jobs are cancelled, every sibling is awaited, and the first
+    * error is rethrown with the others suppressed on it.
+    */
+  def overlap[A, B](a: => A, b: => B): (A, B) = {
+    val r = run(Seq(() => a, () => b))
+    (r(0).asInstanceOf[A], r(1).asInstanceOf[B])
+  }
+
+  def overlap[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
+    val r = run(Seq(() => a, () => b, () => c))
+    (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C])
+  }
+
+  private def run(branches: Seq[() => Any]): Seq[Any] = {
+    val sc = spark.sparkContext
+    val errors = new ConcurrentLinkedQueue[Throwable]
+    val live = new AtomicInteger(branches.size)
+    def guarded(branch: () => Any): Any =
+      try { val r = branch(); live.decrementAndGet(); r }
+      catch { case t: Throwable =>
+        errors.add(t)
+        live.decrementAndGet()
+        // a sibling between jobs when the tag is cancelled starts its
+        // next job uncancelled: cancel again until every branch has ended
+        while (live.get > 0) {
+          sc.cancelJobsWithTag(tag, "a sibling overlap branch failed")
+          Thread.sleep(50)
+        }
+        null
+      }
+    // a nested overlap of the same scope already runs under the tag
+    val owner = !sc.getJobTags().contains(tag)
+    if (owner) sc.addJobTag(tag)
+    try {
+      val forked = branches.tail.map(b =>
+        SQLExecution.withThreadLocalCaptured(spark, PlanBridge.pool)(guarded(b)))
+      val results = guarded(branches.head) +: forked.map(_.get())
+      val first = errors.peek()
+      if (first != null) {
+        errors.forEach(e => if (e ne first) first.addSuppressed(e))
+        throw first
+      }
+      results
+    } finally if (owner) sc.removeJobTag(tag)
   }
 }
