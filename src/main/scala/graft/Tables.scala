@@ -1,38 +1,104 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.types.StructType
+
+import scala.collection.concurrent.TrieMap
+import scala.util.Try
 
 /** Loaders for the driver's test corpus (TESTDATA.md / FIXTURES.md).
   *
   * One parquet file per table under `sfDir`. All query entry points take
   * `(SparkSession, sfDir)` so the same code runs at any scale factor — and,
   * at production scale, against any S3/HDFS prefix holding the same layout.
-  * Scans stay declarative (`spark.read.parquet`) so Catalyst pushes filters
-  * and prunes columns into the parquet reader.
+  * Scans stay declarative so Catalyst pushes filters and prunes columns
+  * into the parquet reader.
+  *
+  * Every single-path parquet read of the engine (bar `ScaleProbe`, whose
+  * probes time the raw read) goes through [[parquet]], which infers a
+  * table's schema once per file version: a plain `spark.read.parquet`
+  * runs one Spark job per call just to read a footer
+  * (`mergeSchemasInParallel`), and a SQL query over the corpus views
+  * reads seven tables. The memo holds one entry per qualified path, keyed on
+  *   - the STAMP: (path, length, modification time) of every leaf file,
+  *     taken from the FileIndex listing the read itself already did (no
+  *     second LIST — at 100 TB that costs more than the job it saves);
+  *   - the CONF KEY: every set session conf whose key contains `parquet`,
+  *     plus `spark.sql.caseSensitive` (e.g. [[events]] flips
+  *     `spark.sql.legacy.parquet.nanosAsLong`, which changes `ts`'s type).
+  * A hit reads with the memoized schema and launches no job; a changed
+  * stamp or conf key re-infers and replaces the entry.
   */
 object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
 
-  /** Parquet row-group count of a table path (files summed), memoized —
-    * metadata-scale driver work (one footer read per file, like every
-    * table format's planning pass). Parquet scans cannot split below a
-    * row group, so this IS the scan's maximum parallelism. */
-  private val rowGroupMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
+  /** Registers the seven TPC-H corpus tables as temp views of their names. */
+  def registerCorpusViews(spark: SparkSession, sfDir: String): Unit =
+    Seq("customer", "orders", "lineitem", "nation", "region", "supplier", "part")
+      .foreach { t => table(spark, sfDir, t).createOrReplaceTempView(t) }
 
-  private def rowGroupsOf(spark: SparkSession, path: String): Long =
-    rowGroupMemo.getOrElseUpdate(path, {
+  /** (path, length, modification time) of every leaf file of a read. */
+  private type Stamp = Set[(String, Long, Long)]
+
+  /** Leaf files of every file relation `df` reads, from the relations' own
+    * FileIndex — the listing the read already did, never a new one. */
+  private def leafFiles(df: DataFrame): Seq[FileStatus] =
+    df.queryExecution.analyzed.collect {
+      case l: LogicalRelation => l.relation match {
+        case HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _, _, _) =>
+          index.allFiles()
+        case _ => Nil
+      }
+    }.flatten
+
+  private def stampOf(files: Seq[FileStatus]): Stamp =
+    files.iterator.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
+
+  private def confKey(spark: SparkSession): Map[String, String] =
+    spark.conf.getAll.filter(_._1.contains("parquet")) +
+      ("spark.sql.caseSensitive" -> spark.conf.get("spark.sql.caseSensitive"))
+
+  private val schemaMemo =
+    TrieMap.empty[String, (Stamp, Map[String, String], StructType)]
+
+  /** `spark.read.parquet(path)` with the schema inferred once per file
+    * version and conf key (see the object doc). */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val key = p.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(p).toString
+    val conf = confKey(spark)
+    def infer(): DataFrame = {
+      val df = spark.read.parquet(path)
+      val stamp = stampOf(leafFiles(df))
+      if (stamp.nonEmpty) schemaMemo.put(key, (stamp, conf, df.schema))
+      df
+    }
+    schemaMemo.get(key) match {
+      case Some((stamp, `conf`, schema)) =>
+        // a failing memoized read falls back to the plain one, which
+        // raises the plain read's own error (a missing path, say)
+        Try(spark.read.schema(schema).parquet(path)).toOption
+          .filter(df => stampOf(leafFiles(df)) == stamp)
+          .getOrElse(infer())
+      case _ => infer()
+    }
+  }
+
+  /** Parquet row-group count of the files `df` reads (summed), memoized per
+    * file stamp — metadata-scale driver work (one footer read per file,
+    * like every table format's planning pass). Parquet scans cannot split
+    * below a row group, so this IS the scan's maximum parallelism. */
+  private val rowGroupMemo = TrieMap.empty[Stamp, Long]
+
+  private def rowGroupsOf(df: DataFrame): Long = {
+    val files = leafFiles(df)
+    if (files.isEmpty) Long.MaxValue
+    else rowGroupMemo.getOrElseUpdate(stampOf(files), {
       try {
-        val conf = spark.sessionState.newHadoopConf()
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(conf)
-        val st = fs.getFileStatus(p)
-        val files =
-          if (st.isDirectory)
-            fs.listStatus(p).toSeq.filter(f =>
-              f.isFile && f.getPath.getName.endsWith(".parquet"))
-          else Seq(st)
+        val conf = df.sparkSession.sessionState.newHadoopConf()
         files.map { f =>
           val in = org.apache.parquet.hadoop.util.HadoopInputFile
             .fromStatus(f, conf)
@@ -41,6 +107,7 @@ object Tables {
         }.sum
       } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
     })
+  }
 
   /** UNSPLITTABLE-INPUT guard (optimization guide §2.5: "one huge
     * unsplittable file … otherwise repartition immediately after the
@@ -54,13 +121,11 @@ object Tables {
     * production-scale table: row groups ≫ cores) this is an exact no-op
     * and the plan is untouched, which is what makes it scale-adaptive
     * rather than a local-mode tune. The width derives from
-    * `defaultParallelism` (cluster size), never a constant. */
-  private[graft] def repartitionIfNarrow(
-      spark: SparkSession, sfDir: String, name: String,
-      df: DataFrame): DataFrame = {
-    val cores = spark.sparkContext.defaultParallelism
-    if (rowGroupsOf(spark, s"$sfDir/$name.parquet") < math.max(cores / 2, 2))
-      df.repartition(cores)
+    * `defaultParallelism` (cluster size), never a constant. The row groups
+    * counted are those of the parquet files `df` reads. */
+  private[graft] def repartitionIfNarrow(df: DataFrame): DataFrame = {
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    if (rowGroupsOf(df) < math.max(cores / 2, 2)) df.repartition(cores)
     else df
   }
 

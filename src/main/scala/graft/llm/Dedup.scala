@@ -369,7 +369,7 @@ object Dedup extends QueryModule {
     * the by-id content fetch a real store serves.)
     */
   def dedupIncrementalIndexed(spark: SparkSession, sfDir: String): DataFrame = {
-    val oldBands = spark.read.parquet(materializedBandIndex(spark, sfDir))
+    val oldBands = Tables.parquet(spark, materializedBandIndex(spark, sfDir))
     val all = shingled(Tables.documents(spark, sfDir))
     val newBands = bandRowsOf(all.filter(col("doc_id") % 4 === 3))
     incrementalBest(all, newBands, oldBands)
@@ -535,8 +535,7 @@ object Dedup extends QueryModule {
     * [[dedupMinhash]] is O(candidates).
     */
   def dedupMinhashEstimate(spark: SparkSession, sfDir: String): DataFrame =
-    minhashEstimateOver(Tables.repartitionIfNarrow(spark, sfDir, "documents",
-      Tables.documents(spark, sfDir)))
+    minhashEstimateOver(Tables.repartitionIfNarrow(Tables.documents(spark, sfDir)))
 
   /** [[dedupMinhashEstimate]] on the deterministic [[CalibSamplePct]]%
     * hash sample — estimator calibration priced for 100 TB: the ±1∕16
@@ -545,8 +544,7 @@ object Dedup extends QueryModule {
     * reproducible AND oracle-replayable (same predicate both engines).
     */
   def dedupMinhashEstimateSampled(spark: SparkSession, sfDir: String): DataFrame =
-    minhashEstimateOver(Tables.repartitionIfNarrow(spark, sfDir, "documents",
-      calibSample(Tables.documents(spark, sfDir))))
+    minhashEstimateOver(Tables.repartitionIfNarrow(calibSample(Tables.documents(spark, sfDir))))
 
   private def minhashEstimateOver(corpus: DataFrame): DataFrame = {
     val docs = shingled(corpus)
@@ -942,8 +940,7 @@ object Dedup extends QueryModule {
   def dedupSimhashPairs(spark: SparkSession, sfDir: String): DataFrame = {
     // widened (guide §2.5): the per-token simhash accumulation is the
     // expensive map side; a 1-row-group scan ran it on one task
-    val sim = simhashOf(Tables.repartitionIfNarrow(spark, sfDir, "documents",
-      Tables.documents(spark, sfDir)))
+    val sim = simhashOf(Tables.repartitionIfNarrow(Tables.documents(spark, sfDir)))
     val lang = Tables.documents(spark, sfDir).select(col("doc_id"), col("lang"))
     val s = sim.join(lang, "doc_id")
 

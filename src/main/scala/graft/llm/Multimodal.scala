@@ -66,8 +66,7 @@ object Multimodal extends QueryModule {
     // widened when the scan is row-group-narrow (guide §2.5; Tables
     // scaladoc): every downstream codec/aHash decode is per-row-expensive
     // map work that a 1-row-group table otherwise serializes onto one task
-    Tables.repartitionIfNarrow(spark, sfDir, "documents",
-      Tables.documents(spark, sfDir)
+    Tables.repartitionIfNarrow(Tables.documents(spark, sfDir)
         .select(
           col("doc_id").as("id"),
           element_at(

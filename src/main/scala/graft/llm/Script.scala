@@ -161,8 +161,7 @@ object Script extends QueryModule {
     // two aware-tokenization regex passes are the per-row-expensive kind
     // that otherwise run on ONE task over a 1-row-group table
     // (r14-measured: a single 1.8 s task carried this whole query)
-    Tables.repartitionIfNarrow(spark, sfDir, "documents",
-        Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
+    Tables.repartitionIfNarrow(Tables.documents(spark, sfDir).select(col("doc_id"), col("text")))
       .select(col("doc_id"), plantedCol.as("t"))
       // script class attaches BEFORE the explode: scriptOf is 8
       // whole-document translates, so computing it per exploded WORD

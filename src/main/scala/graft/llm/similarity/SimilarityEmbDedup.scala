@@ -29,8 +29,7 @@ trait SimilarityEmbDedup extends SimilarityCore {
     // widened when the scan is row-group-narrow (guide §2.5; Tables
     // scaladoc): the N² exact-verify loop streams the LEFT side, so a
     // 1-row-group table otherwise runs the whole pair scan on one task
-    dedupEmbeddingOver(embDouble(Tables.repartitionIfNarrow(
-      spark, sfDir, "embeddings", Tables.embeddings(spark, sfDir))))
+    dedupEmbeddingOver(embDouble(Tables.repartitionIfNarrow(Tables.embeddings(spark, sfDir))))
 
   /** [[dedupEmbedding]]'s calibration tier as a PROBE sample: the
     * deterministic [[Dedup.CalibSamplePct]]% hash sample of vec_ids are
@@ -48,8 +47,7 @@ trait SimilarityEmbDedup extends SimilarityCore {
     */
   def dedupEmbeddingSampled(spark: SparkSession, sfDir: String): DataFrame = {
     // widened like dedupEmbedding (the probe×corpus loop streams probes)
-    val emb = embDouble(Tables.repartitionIfNarrow(
-        spark, sfDir, "embeddings", Tables.embeddings(spark, sfDir)))
+    val emb = embDouble(Tables.repartitionIfNarrow(Tables.embeddings(spark, sfDir)))
       .withColumn("nrm", normOf(col("e")))
     val probes = emb
       .filter(pmod(graft.functions.Hashing.hash60(col("vec_id").cast("string")),

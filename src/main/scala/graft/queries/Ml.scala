@@ -84,8 +84,7 @@ object Ml extends QueryModule {
     // row-group-narrow (guide §2.5 unsplittable input; Tables scaladoc):
     // a 1-row-group table otherwise caches as ONE partition and every GD
     // round's map side runs single-task (r14-measured: 5 × ~0.4 s serial).
-    val feats = Tables.repartitionIfNarrow(spark, sfDir, "lineitem",
-        Tables.lineitem(spark, sfDir)
+    val feats = Tables.repartitionIfNarrow(Tables.lineitem(spark, sfDir)
           .selectExpr(s"$X1 AS x1", s"$X2 AS x2", s"$Y AS y"))
       .persist()
     var w1 = java.math.BigDecimal.valueOf(0, 6)
@@ -168,8 +167,7 @@ object Ml extends QueryModule {
     */
   def mlLogregGd(spark: SparkSession, sfDir: String): DataFrame = {
     // widened like mlLinregGd's grid (see there) before the pinned cache
-    val feats = Tables.repartitionIfNarrow(spark, sfDir, "documents",
-        Tables.documents(spark, sfDir)
+    val feats = Tables.repartitionIfNarrow(Tables.documents(spark, sfDir)
           .selectExpr(s"$LogregFeats1 AS x1",
             s"${LogregFeats2} AS x2",
             s"$LogregLabel AS y"))
@@ -470,8 +468,7 @@ object Ml extends QueryModule {
       spark: SparkSession, sfDir: String): (Long, Long, Long, Long) = {
     val key = s"$sfDir@${graft.llm.Bpe.corpusFingerprint(spark, sfDir)}"
     curateModelMemo.getOrElseUpdate(key,
-      logregTrain(Tables.repartitionIfNarrow(spark, sfDir, "documents",
-        curateFeatsOf(Tables.documents(spark, sfDir)))))
+      logregTrain(Tables.repartitionIfNarrow(curateFeatsOf(Tables.documents(spark, sfDir)))))
   }
 
   def curateClassifier(spark: SparkSession, sfDir: String): DataFrame = {

@@ -13,13 +13,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SqlSurface extends QueryModule {
 
-  private def registerViews(spark: SparkSession, sfDir: String): Unit =
-    Seq("customer", "orders", "lineitem", "nation", "region", "supplier", "part")
-      .foreach { t => Tables.table(spark, sfDir, t).createOrReplaceTempView(t) }
-
   /** TPC-H Q3 shape: unshipped-revenue top-10 per order. */
   def sqlQ3(spark: SparkSession, sfDir: String): DataFrame = {
-    registerViews(spark, sfDir)
+    Tables.registerCorpusViews(spark, sfDir)
     spark.sql(
       """SELECT l_orderkey,
         |  ROUND(SUM(l_extendedprice * (1.0 - l_discount)), 4) AS revenue,
@@ -37,7 +33,7 @@ object SqlSurface extends QueryModule {
 
   /** TPC-H Q5 shape: revenue by nation within a region. */
   def sqlQ5(spark: SparkSession, sfDir: String): DataFrame = {
-    registerViews(spark, sfDir)
+    Tables.registerCorpusViews(spark, sfDir)
     spark.sql(
       """SELECT n_name,
         |  CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(30,6))) AS DOUBLE) AS revenue
@@ -58,7 +54,7 @@ object SqlSurface extends QueryModule {
     * customers whose account balance exceeds their nation's average.
     */
   def sqlCorrelated(spark: SparkSession, sfDir: String): DataFrame = {
-    registerViews(spark, sfDir)
+    Tables.registerCorpusViews(spark, sfDir)
     spark.sql(
       """SELECT c_custkey, c_name, ROUND(c_acctbal, 2) AS bal
         |FROM customer c1
@@ -69,7 +65,7 @@ object SqlSurface extends QueryModule {
 
   /** Explicit GROUPING SETS (A4's third form, beyond rollup/cube). */
   def sqlGroupingSets(spark: SparkSession, sfDir: String): DataFrame = {
-    registerViews(spark, sfDir)
+    Tables.registerCorpusViews(spark, sfDir)
     spark.sql(
       """SELECT o_orderstatus, o_orderpriority,
         |  COUNT(*) AS n,
@@ -85,7 +81,7 @@ object SqlSurface extends QueryModule {
     * the double sums are exact and order-independent — no rounding needed.
     */
   def sqlQ18(spark: SparkSession, sfDir: String): DataFrame = {
-    registerViews(spark, sfDir)
+    Tables.registerCorpusViews(spark, sfDir)
     spark.sql(
       """SELECT c_name, c_custkey, o_orderkey, SUM(l_quantity) AS total_qty
         |FROM customer
@@ -105,7 +101,7 @@ object SqlSurface extends QueryModule {
     * Nations 3 and 8 are the two with suppliers at every scale factor.
     */
   def sqlQ7(spark: SparkSession, sfDir: String): DataFrame = {
-    registerViews(spark, sfDir)
+    Tables.registerCorpusViews(spark, sfDir)
     spark.sql(
       """SELECT supp_nation, cust_nation, l_year,
         |  COUNT(*) AS n_ship,
@@ -135,7 +131,7 @@ object SqlSurface extends QueryModule {
     * join-side predicate, so the plan is one shuffle, no per-row subquery.
     */
   def sqlQ4(spark: SparkSession, sfDir: String): DataFrame = {
-    registerViews(spark, sfDir)
+    Tables.registerCorpusViews(spark, sfDir)
     spark.sql(
       """SELECT o_orderpriority, COUNT(*) AS order_count
         |FROM orders
@@ -157,7 +153,7 @@ object SqlSurface extends QueryModule {
     * commit/receipt dates, so o_orderdate anchors the lateness clock).
     */
   def sqlQ21(spark: SparkSession, sfDir: String): DataFrame = {
-    registerViews(spark, sfDir)
+    Tables.registerCorpusViews(spark, sfDir)
     spark.sql(
       """WITH lateline AS (
         |  SELECT l_orderkey, l_suppkey,
@@ -187,7 +183,7 @@ object SqlSurface extends QueryModule {
     * broken by key, so ranks are engine-independent.
     */
   def sqlTopkWindow(spark: SparkSession, sfDir: String): DataFrame = {
-    registerViews(spark, sfDir)
+    Tables.registerCorpusViews(spark, sfDir)
     spark.sql(
       """SELECT o_orderpriority, rn, o_orderkey, o_totalprice
         |FROM (
@@ -209,7 +205,7 @@ object SqlSurface extends QueryModule {
     * plans without a per-row re-execution at any scale.
     */
   def sqlLateral(spark: SparkSession, sfDir: String): DataFrame = {
-    registerViews(spark, sfDir)
+    Tables.registerCorpusViews(spark, sfDir)
     spark.sql(
       """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
         |FROM customer c, LATERAL (
@@ -224,7 +220,7 @@ object SqlSurface extends QueryModule {
     * has no l_shipmode; l_linestatus takes its grouping role).
     */
   def sqlQ12(spark: SparkSession, sfDir: String): DataFrame = {
-    registerViews(spark, sfDir)
+    Tables.registerCorpusViews(spark, sfDir)
     spark.sql(
       """SELECT l_linestatus,
         |  SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -244,7 +240,7 @@ object SqlSurface extends QueryModule {
     * share is order-independent at any scale.
     */
   def sqlQ14(spark: SparkSession, sfDir: String): DataFrame = {
-    registerViews(spark, sfDir)
+    Tables.registerCorpusViews(spark, sfDir)
     spark.sql(
       """SELECT
         |  CAST(SUM(CASE WHEN p_type = 'PROMO'

@@ -42,12 +42,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object TpchSql extends QueryModule {
 
-  private def views(spark: SparkSession, sfDir: String): Unit =
-    Seq("customer", "orders", "lineitem", "nation", "region", "supplier", "part")
-      .foreach { t => Tables.table(spark, sfDir, t).createOrReplaceTempView(t) }
-
   private def run(sql: String)(spark: SparkSession, sfDir: String): DataFrame = {
-    views(spark, sfDir)
+    Tables.registerCorpusViews(spark, sfDir)
     spark.sql(sql)
   }
 

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,7 +43,7 @@ object CuratedZone {
       path: String,
       fromYm: Int,
       toYm: Int): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .filter(col("part_ym") >= fromYm && col("part_ym") <= toYm)
 
   /** Compact a partitioned dataset's small files into ~target-sized ones —
@@ -67,7 +68,7 @@ object CuratedZone {
       partCol: String,
       sortCols: Seq[String],
       targetRecordsPerFile: Long = 5000000L): Int = {
-    val df = spark.read.parquet(srcPath)
+    val df = Tables.parquet(spark, srcPath)
     val total = df.count()
     val slices = math.max(1, math.ceil(total.toDouble / targetRecordsPerFile).toInt)
     df.repartitionByRange(slices, (partCol +: sortCols).map(col): _*)

@@ -92,8 +92,9 @@ object Pipeline {
         val enriched = Enrich.enrich(batch.drop(Ndjson.CorruptCol))
         // group rows by originating object; each group writes to
         // <resolvedRoot>/transformed/<source_key> (glue/job.py:19 rule).
-        // The collect is the batch's file LIST (already driver-known to the
-        // file source), never row data.
+        // The collect only returns the batch's source keys, but it computes
+        // them with a row scan of the batch plus a shuffle for the distinct:
+        // 2 of the 5 Spark jobs of each drained round.
         val srcs = enriched.select("__src").distinct().collect().map(_.getString(0))
         srcs.foreach { src =>
           enriched.filter(col("__src") === src).drop("__src")
