@@ -3,6 +3,7 @@ package graft
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types.StructType
 
 import scala.collection.concurrent.TrieMap
@@ -16,20 +17,23 @@ import scala.util.Try
   * Scans stay declarative so Catalyst pushes filters and prunes columns
   * into the parquet reader.
   *
-  * Every single-path parquet read of the engine (bar `ScaleProbe`, whose
-  * probes time the raw read) goes through [[parquet]], which infers a
+  * Corpus tables ([[table]]) are read through [[parquet]], which infers a
   * table's schema once per file version: a plain `spark.read.parquet`
   * runs one Spark job per call just to read a footer
   * (`mergeSchemasInParallel`), and a SQL query over the corpus views
-  * reads seven tables. The memo holds one entry per qualified path, keyed on
+  * reads seven unchanged tables. Other parquet reads (fresh per-run
+  * paths, per-version dirs, outputs read right after they are written)
+  * would never hit, so they stay plain. The memo holds one entry per
+  * qualified path, keyed on
   *   - the STAMP: (path, length, modification time) of every leaf file,
   *     taken from the FileIndex listing the read itself already did (no
   *     second LIST — at 100 TB that costs more than the job it saves);
   *   - the CONF KEY: every set session conf whose key contains `parquet`,
   *     plus `spark.sql.caseSensitive` (e.g. [[events]] flips
   *     `spark.sql.legacy.parquet.nanosAsLong`, which changes `ts`'s type).
-  * A hit reads with the memoized schema and launches no job; a changed
-  * stamp or conf key re-infers and replaces the entry.
+  * A hit reads with the memoized schema and launches no job. A changed
+  * stamp re-infers from the same listing and replaces the entry (a
+  * partitioned table, and a changed conf key, take a plain read).
   */
 object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
@@ -43,13 +47,13 @@ object Tables {
   /** (path, length, modification time) of every leaf file of a read. */
   private type Stamp = Set[(String, Long, Long)]
 
-  /** Leaf files of every file relation `df` reads, from the relations' own
-    * FileIndex — the listing the read already did, never a new one. */
-  private def leafFiles(df: DataFrame): Seq[FileStatus] =
+  /** The file relations `df` reads, each with its FileIndex — the listing
+    * the read already did, never a new one. */
+  private def fileRelations(df: DataFrame): Seq[(HadoopFsRelation, PartitioningAwareFileIndex)] =
     df.queryExecution.analyzed.collect {
       case l: LogicalRelation => l.relation match {
-        case HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _, _, _) =>
-          index.allFiles()
+        case r @ HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _, _, _) =>
+          Seq(r -> index)
         case _ => Nil
       }
     }.flatten
@@ -66,47 +70,69 @@ object Tables {
 
   /** `spark.read.parquet(path)` with the schema inferred once per file
     * version and conf key (see the object doc). */
-  def parquet(spark: SparkSession, path: String): DataFrame = {
+  private def parquet(spark: SparkSession, path: String): DataFrame = {
     val p = new Path(path)
     val key = p.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(p).toString
     val conf = confKey(spark)
+    def remember(df: DataFrame, files: Seq[FileStatus]): DataFrame = {
+      if (files.nonEmpty) schemaMemo.put(key, (stampOf(files), conf, df.schema))
+      df
+    }
     def infer(): DataFrame = {
       val df = spark.read.parquet(path)
-      val stamp = stampOf(leafFiles(df))
-      if (stamp.nonEmpty) schemaMemo.put(key, (stamp, conf, df.schema))
-      df
+      remember(df, fileRelations(df).flatMap(_._2.allFiles()))
     }
     schemaMemo.get(key) match {
       case Some((stamp, `conf`, schema)) =>
         // a failing memoized read falls back to the plain one, which
         // raises the plain read's own error (a missing path, say)
         Try(spark.read.schema(schema).parquet(path)).toOption
-          .filter(df => stampOf(leafFiles(df)) == stamp)
-          .getOrElse(infer())
+          .map(df => df -> fileRelations(df)) match {
+          case Some((df, Seq((rel, index)))) =>
+            val files = index.allFiles()
+            if (stampOf(files) == stamp) df
+            // Stale: the files changed. Re-infer over the listing this
+            // read already did. Its partition values were typed by the
+            // old schema, so a partitioned table takes the plain read.
+            else if (index.partitionSchema.isEmpty)
+              PlanBridge.reinferred(spark, rel, files)
+                .map(remember(_, files)).getOrElse(infer())
+            else infer()
+          case _ => infer()
+        }
       case _ => infer()
     }
   }
 
-  /** Parquet row-group count of the files `df` reads (summed), memoized per
-    * file stamp — metadata-scale driver work (one footer read per file,
-    * like every table format's planning pass). Parquet scans cannot split
-    * below a row group, so this IS the scan's maximum parallelism. */
-  private val rowGroupMemo = TrieMap.empty[Stamp, Long]
+  /** Parquet row-group count of the files `df` reads (summed), memoized
+    * per set of root paths with the stamp it was counted at, so a table
+    * rewritten at the same path is counted again — metadata-scale driver
+    * work (one footer read per file, like every table format's planning
+    * pass). Parquet scans cannot split below a row group, so this IS the
+    * scan's maximum parallelism. */
+  private val rowGroupMemo = TrieMap.empty[Seq[String], (Stamp, Long)]
 
   private def rowGroupsOf(df: DataFrame): Long = {
-    val files = leafFiles(df)
+    val indexes = fileRelations(df).map(_._2)
+    val files = indexes.flatMap(_.allFiles())
+    val key = indexes.flatMap(_.rootPaths.map(_.toString)).sorted
+    val stamp = stampOf(files)
     if (files.isEmpty) Long.MaxValue
-    else rowGroupMemo.getOrElseUpdate(stampOf(files), {
-      try {
-        val conf = df.sparkSession.sessionState.newHadoopConf()
-        files.map { f =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(f, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRowGroups.size.toLong finally r.close()
-        }.sum
-      } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
-    })
+    else rowGroupMemo.get(key) match {
+      case Some((`stamp`, n)) => n
+      case _ =>
+        val n = try {
+          val conf = df.sparkSession.sessionState.newHadoopConf()
+          files.map { f =>
+            val in = org.apache.parquet.hadoop.util.HadoopInputFile
+              .fromStatus(f, conf)
+            val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+            try r.getRowGroups.size.toLong finally r.close()
+          }.sum
+        } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
+        rowGroupMemo.put(key, (stamp, n))
+        n
+    }
   }
 
   /** UNSPLITTABLE-INPUT guard (optimization guide §2.5: "one huge

@@ -369,7 +369,7 @@ object Dedup extends QueryModule {
     * the by-id content fetch a real store serves.)
     */
   def dedupIncrementalIndexed(spark: SparkSession, sfDir: String): DataFrame = {
-    val oldBands = Tables.parquet(spark, materializedBandIndex(spark, sfDir))
+    val oldBands = spark.read.parquet(materializedBandIndex(spark, sfDir))
     val all = shingled(Tables.documents(spark, sfDir))
     val newBands = bandRowsOf(all.filter(col("doc_id") % 4 === 3))
     incrementalBest(all, newBands, oldBands)

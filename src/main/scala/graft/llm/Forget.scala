@@ -513,7 +513,7 @@ object Forget extends QueryModule {
   def manifestFromTombstones(
       spark: SparkSession, sfDir: String, tombstoneDir: String): DataFrame =
     forgetPackOver(spark, sfDir,
-      Tables.parquet(spark, tombstoneDir).select("doc_id").distinct())
+      spark.read.parquet(tombstoneDir).select("doc_id").distinct())
 
   // -------------------------------------------------------------- registry
 

@@ -396,7 +396,7 @@ object Refinery extends QueryModule {
     * manifest equals the batch `refinery_pack` on the same corpus.
     */
   def manifestFromCurated(spark: SparkSession, curatedDir: String): DataFrame =
-    packManifest(Tables.parquet(spark, curatedDir))
+    packManifest(spark.read.parquet(curatedDir))
 
   private def packManifest(curated: DataFrame): DataFrame =
     Sampling.cumBeforeByLang(
@@ -506,7 +506,7 @@ object Refinery extends QueryModule {
         //     plus within-batch pairs
         //     (step (a) just wrote batch=<id>, so the zone always exists;
         //     on batch 0 the filter prunes everything — an empty history)
-        val olds = Tables.parquet(spark, s"$indexDir/sigs")
+        val olds = spark.read.parquet(s"$indexDir/sigs")
           .filter(col("batch") < batchId)
           .select("doc_id", "lang", "s")
         Dedup.incrementalJaccardPairs(sigs, olds, t = 0.8)
@@ -557,13 +557,13 @@ object Refinery extends QueryModule {
     */
   def manifestFromCuratedDedup(
       spark: SparkSession, curatedDir: String, indexDir: String): DataFrame = {
-    val pairs = Tables.parquet(spark, s"$indexDir/pairs")
+    val pairs = spark.read.parquet(s"$indexDir/pairs")
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
     val losers = graft.operators.ConnectedComponents.components(pairs)
       .filter(col("node") =!= col("component"))
       .select(col("node").as("doc_id"))
     packManifest(
-      Tables.parquet(spark, curatedDir).join(losers, Seq("doc_id"), "left_anti"))
+      spark.read.parquet(curatedDir).join(losers, Seq("doc_id"), "left_anti"))
   }
 
   /** Publication over [[Similarity.semDedupIndexStream]]'s zones — the
@@ -581,10 +581,10 @@ object Refinery extends QueryModule {
     */
   def manifestFromCuratedSemantic(
       spark: SparkSession, curatedDir: String, semIndexDir: String): DataFrame = {
-    val losers = Tables.parquet(spark, s"$semIndexDir/pairs")
+    val losers = spark.read.parquet(s"$semIndexDir/pairs")
       .select(col("hi").as("doc_id")).distinct()
     packManifest(
-      Tables.parquet(spark, curatedDir).join(losers, Seq("doc_id"), "left_anti"))
+      spark.read.parquet(curatedDir).join(losers, Seq("doc_id"), "left_anti"))
   }
 
   /** The refinery's SINK pass: materialize the curated corpus — kept docs
@@ -617,7 +617,7 @@ object Refinery extends QueryModule {
       .repartition(col("epoch"))
       .sortWithinPartitions("epoch", "serve_rank")
       .write.mode("overwrite").partitionBy("epoch").parquet(outDir)
-    Tables.parquet(spark, outDir).count()
+    spark.read.parquet(outDir).count()
   }
 
   def refineryWrite(spark: SparkSession, sfDir: String, outPath: String): Long = {
@@ -629,7 +629,7 @@ object Refinery extends QueryModule {
       .join(Tables.documents(spark, sfDir).select("doc_id", "source"), "doc_id")
       .select("doc_id", "lang", "source", "n_words", "n_kept_words", "masked_text")
       .write.mode("overwrite").parquet(outPath)
-    Tables.parquet(spark, outPath).count()
+    spark.read.parquet(outPath).count()
   }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

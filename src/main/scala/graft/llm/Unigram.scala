@@ -299,7 +299,7 @@ object Unigram extends QueryModule {
           val zones = new java.io.File(root, "zones")
           val genC = new java.io.File(zones, "wordcounts_gen1").toPath
           graft.Fs.writeParquetAtomic(words, genC)
-          val (vocab, wordNp, release) = train(Tables.parquet(spark, genC.toString))
+          val (vocab, wordNp, release) = train(spark.read.parquet(genC.toString))
           val genV = new java.io.File(zones, "vocab_gen1").toPath
           val genW = new java.io.File(zones, "wordnp_gen1").toPath
           graft.Fs.writeParquetAtomic(vocab, genV)
@@ -346,7 +346,7 @@ object Unigram extends QueryModule {
       s"${name}_gen$epoch-${java.util.UUID.randomUUID()}").toPath
     val genC = gen("wordcounts")
     graft.Fs.writeParquetAtomic(merged, genC)
-    val (vocab, wordNp, release) = train(Tables.parquet(spark, genC.toString))
+    val (vocab, wordNp, release) = train(spark.read.parquet(genC.toString))
     val genV = gen("vocab")
     val genW = gen("wordnp")
     graft.Fs.writeParquetAtomic(vocab, genV)
@@ -419,7 +419,7 @@ object Unigram extends QueryModule {
       s"${name}_gen$epoch-${java.util.UUID.randomUUID()}").toPath
     val genC = gen("wordcounts")
     graft.Fs.writeParquetAtomic(subtracted, genC)
-    val (vocab, wordNp, release) = train(Tables.parquet(spark, genC.toString))
+    val (vocab, wordNp, release) = train(spark.read.parquet(genC.toString))
     val genV = gen("vocab")
     val genW = gen("wordnp")
     graft.Fs.writeParquetAtomic(vocab, genV)

@@ -119,7 +119,7 @@ trait SimilarityIvf extends SimilarityBrute {
     * Bench's min-of-two records the warm indexed cost.
     */
   def simAnnIvfIndexed(spark: SparkSession, sfDir: String): DataFrame =
-    ivfProbe(Tables.parquet(spark, materializedIvfIndex(spark, sfDir)))
+    ivfProbe(spark.read.parquet(materializedIvfIndex(spark, sfDir)))
 
   /** IVF index APPEND — the ingestion half of the standing-ANN-index
     * story (`dedup_incremental_indexed`'s discipline on vectors): an
@@ -161,7 +161,7 @@ trait SimilarityIvf extends SimilarityBrute {
   def simAnnIvfIndexedAppend(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = embDouble(Tables.embeddings(spark, sfDir))
     val isNew = col("vec_id") % 10 === 9
-    val history = Tables.parquet(spark, materializedIvfIndex(spark, sfDir))
+    val history = spark.read.parquet(materializedIvfIndex(spark, sfDir))
       .filter(!isNew)
     ivfProbe(history.unionByName(
       ivfAssignTo(ivfCentroidsOf(emb), emb.filter(isNew))))

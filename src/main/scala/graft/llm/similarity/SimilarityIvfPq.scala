@@ -805,7 +805,7 @@ trait SimilarityIvfPq extends SimilarityIvf {
       ivfPqIndexOf(spark, sfDir, trainedPq = true)
     rerankFromZoneOver(spark, sfDir, emb, coarse,
       ivfPqAdcOver(emb, subs, coarse, pqCb, postings),
-      Tables.parquet(spark, materializedVectorZone(spark, sfDir)))
+      spark.read.parquet(materializedVectorZone(spark, sfDir)))
   }
 
   /** The zone-fetch re-rank tail over an ARBITRARY ADC frame — the
@@ -889,7 +889,7 @@ trait SimilarityIvfPq extends SimilarityIvf {
         graft.sources.Maintenance.readZoneThroughManifest(
           spark, m, "vectors", asOfEpoch)
       case None =>
-        Tables.parquet(spark, materializedVectorZone(spark, sfDir))
+        spark.read.parquet(materializedVectorZone(spark, sfDir))
     }
     rerankFromZoneOver(spark, sfDir, emb, coarse, adc, zone)
   }
@@ -909,7 +909,7 @@ trait SimilarityIvfPq extends SimilarityIvf {
     val cells = probedCellsOf(emb, coarse)
       .filter(col("prn") <= IvfPqNprobe)
       .select("cluster").distinct().collect().map(_.getLong(0))
-    Tables.parquet(spark, s"$indexDir/codes")
+    spark.read.parquet(s"$indexDir/codes")
       .filter(col("cluster").isin(cells: _*))
       .select("cluster", "cand_id", "s", "cid")
   }

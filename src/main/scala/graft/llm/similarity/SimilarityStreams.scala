@@ -63,7 +63,7 @@ trait SimilarityStreams extends SimilarityIvfPq with SimilarityEmbDedup {
     * search deployment pays per query wave against a streamed-in index.
     */
   def annProbeFromIndex(spark: SparkSession, indexDir: String): DataFrame =
-    ivfProbe(Tables.parquet(spark, s"$indexDir/assigned")
+    ivfProbe(spark.read.parquet(s"$indexDir/assigned")
       .select("vec_id", "e", "cluster"))
 
   /** SemDeDup ON THE STREAM — [[annIndexStream]]'s standing assignment
@@ -118,7 +118,7 @@ trait SimilarityStreams extends SimilarityIvfPq with SimilarityEmbDedup {
           .parquet(s"$indexDir/assigned/batch=$batchId")
         val nw = assigned.select(
           col("vec_id").as("vn"), col("e").as("en"), col("cluster"))
-        val hist = Tables.parquet(spark, s"$indexDir/assigned")
+        val hist = spark.read.parquet(s"$indexDir/assigned")
           .filter(col("batch") < batchId)
           .select(col("vec_id").as("vh"), col("e").as("eh"),
             col("cluster").as("cluster_h"))

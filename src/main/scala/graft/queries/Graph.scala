@@ -782,7 +782,7 @@ object Graph extends QueryModule {
     * warm fold-only cost, exactly the steady state.)
     */
   def graphCopurchaseFold(spark: SparkSession, sfDir: String): DataFrame = {
-    val prior = Tables.parquet(spark, materializedPrior(spark, sfDir))
+    val prior = spark.read.parquet(materializedPrior(spark, sfDir))
     val edges = copurchaseEdges(spark, sfDir, keyMod = Some(3))
     val wave = pmod(hash(col("a"), col("b")), lit(2))
     graft.operators.ConnectedComponents.incrementalComponents(

@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.Tables
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,7 +42,7 @@ object CuratedZone {
       path: String,
       fromYm: Int,
       toYm: Int): DataFrame =
-    Tables.parquet(spark, path)
+    spark.read.parquet(path)
       .filter(col("part_ym") >= fromYm && col("part_ym") <= toYm)
 
   /** Compact a partitioned dataset's small files into ~target-sized ones —
@@ -68,7 +67,7 @@ object CuratedZone {
       partCol: String,
       sortCols: Seq[String],
       targetRecordsPerFile: Long = 5000000L): Int = {
-    val df = Tables.parquet(spark, srcPath)
+    val df = spark.read.parquet(srcPath)
     val total = df.count()
     val slices = math.max(1, math.ceil(total.toDouble / targetRecordsPerFile).toInt)
     df.repartitionByRange(slices, (partCol +: sortCols).map(col): _*)

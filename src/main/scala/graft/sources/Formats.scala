@@ -109,7 +109,7 @@ object Formats extends QueryModule {
     Tables.orders(spark, sfDir)
       .withColumn("o_year", year(col("o_orderdate")))
       .write.mode("overwrite").partitionBy("o_year").parquet(out)
-    Tables.parquet(spark, out)
+    spark.read.parquet(out)
       .filter(col("o_year") >= 1996) // partition pruning: only those dirs scan
       .groupBy("o_year")
       .agg(

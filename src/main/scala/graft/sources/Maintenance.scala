@@ -124,7 +124,7 @@ object Maintenance extends QueryModule {
       // null __bin land rows in __HIVE_DEFAULT_PARTITION__ and blow up
       // the rename loop's toLong far from the cause.
       val base = regexp_extract(input_file_name(), "[^/]+$", 0)
-      Tables.parquet(spark, pd.toString)
+      spark.read.parquet(pd.toString)
         .withColumn("__bin", coalesce(
           element_at(typedlit(fileToBin), base),
           element_at(typedlit(fileToBin), try_url_decode(base)),
@@ -278,7 +278,7 @@ object Maintenance extends QueryModule {
       .sortBy(_.getName)
     require(srcFiles.nonEmpty,
       s"forgetArtifacts: no parquet part files in $artifactDir")
-    val touchedRaw = Tables.parquet(spark, artifactDir)
+    val touchedRaw = spark.read.parquet(artifactDir)
       .select(col(keyCol),
         regexp_extract(input_file_name(), "[^/]+$", 0).as("__base"))
       .join(broadcast(del), Seq(keyCol), "left_semi")
@@ -353,13 +353,13 @@ object Maintenance extends QueryModule {
     // probe + rewrite anti-join) and once at consolidation — unpersisted,
     // each reference re-reads every batch dir and re-runs distinct
     // (review-caught)
-    val del = Tables.parquet(spark, tombstoneDir).select("doc_id")
+    val del = spark.read.parquet(tombstoneDir).select("doc_id")
       .distinct().persist()
     val rows = artifacts.map { case (dir, keyCol, target) =>
-      val before = Tables.parquet(spark, dir).count()
+      val before = spark.read.parquet(dir).count()
       val (installed, rewritten) = forgetArtifacts(
         spark, dir, keyCol, del.withColumnRenamed("doc_id", keyCol), target)
-      val after = Tables.parquet(spark, installed).count()
+      val after = spark.read.parquet(installed).count()
       Row(dir, keyCol, rewritten.length.toLong, before - after)
     }
     graft.Fs.writeParquetAtomic(del, consolidatedTarget)
@@ -551,7 +551,7 @@ object Maintenance extends QueryModule {
     require(zones.contains(zone),
       s"zoneSchemaVersion: zone '$zone' absent from epoch $epoch")
     val d = completeEpochDirs(manifestDir).find(_._1 == epoch).get._2
-    val m = Tables.parquet(spark, d.toString)
+    val m = spark.read.parquet(d.toString)
     if (!m.columns.contains("zone_schema_version")) 1L
     else m.filter(col("zone") === zone)
       .select("zone_schema_version").collect().head.getLong(0)
@@ -597,7 +597,7 @@ object Maintenance extends QueryModule {
 
   private def readManifest(
       spark: SparkSession, d: java.io.File): Map[String, String] =
-    Tables.parquet(spark, d.toString).collect()
+    spark.read.parquet(d.toString).collect()
       .map(r => r.getAs[String]("zone") -> r.getAs[String]("generation"))
       .toMap
 
@@ -661,7 +661,7 @@ object Maintenance extends QueryModule {
     val gen = zones.getOrElse(zone, sys.error(
       s"readZoneThroughManifest: zone '$zone' absent from epoch $epoch " +
         s"(zones: ${zones.keys.toSeq.sorted.mkString(", ")})"))
-    Tables.parquet(spark, gen)
+    spark.read.parquet(gen)
   }
 
   /** Full manifest rows (zone, generation, key_col, schema_version) of
@@ -675,7 +675,7 @@ object Maintenance extends QueryModule {
     val (epoch, _) = epochAsOf(spark, manifestDir, asOf).getOrElse(
       sys.error(s"manifestRowsAsOf: no complete epoch in $manifestDir"))
     val d = completeEpochDirs(manifestDir).find(_._1 == epoch).get._2
-    val m = Tables.parquet(spark, d.toString)
+    val m = spark.read.parquet(d.toString)
     val hasV = m.columns.contains("zone_schema_version")
     (epoch, m.collect().toSeq.map { r =>
       (r.getAs[String]("zone"), r.getAs[String]("generation"),
@@ -744,7 +744,7 @@ object Maintenance extends QueryModule {
     val staging = target.resolveSibling(
       s"${target.getFileName}.tmp.staging.${java.util.UUID.randomUUID().toString}")
     try {
-      Tables.parquet(spark, cur._2)
+      spark.read.parquet(cur._2)
         .withColumn("__bin", coalesce(
           element_at(typedlit(fileToBin), base),
           element_at(typedlit(fileToBin), try_url_decode(base)),

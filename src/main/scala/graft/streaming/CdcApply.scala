@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.Tables
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -111,7 +110,7 @@ object CdcApply {
   def readSnapshot(spark: SparkSession, tableDir: String, version: Option[Long] = None): DataFrame = {
     val v = version.orElse(versions(tableDir).lastOption)
       .getOrElse(sys.error(s"no snapshot under $tableDir"))
-    Tables.parquet(spark, s"$tableDir/v=$v")
+    spark.read.parquet(s"$tableDir/v=$v")
   }
 
   /** Start the drain: one snapshot version per micro-batch of changes.

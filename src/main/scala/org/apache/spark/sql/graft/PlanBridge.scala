@@ -3,10 +3,12 @@ package org.apache.spark.sql.graft
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.ThreadUtils
 
@@ -96,6 +98,20 @@ object PlanBridge {
     if (captureStagedPlans.get())
       staged.add((graftCallSite(), ds.queryExecution.executedPlan))
     (spark.internalCreateDataFrame(rdd, df.schema), rdd, n)
+  }
+
+  /** `rel` with its data schema inferred afresh from `files`, the way
+    * `DataSource` infers it for a plain read (options minus `path`, then
+    * nullable), over `rel`'s own file index: the listing `rel` already
+    * did, with no second LIST. None when nothing can be inferred. */
+  def reinferred(
+      spark: SparkSession,
+      rel: HadoopFsRelation,
+      files: Seq[FileStatus]): Option[DataFrame] = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    rel.fileFormat.inferSchema(session, rel.options - "path", files).map { schema =>
+      session.baseRelationToDataFrame(rel.copy(dataSchema = schema.asNullable)(session))
+    }
   }
 
   /** Release a superseded cut: unpersist its blocks AND delete its

@@ -11,22 +11,36 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.metrics.source.HiveCatalogMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.types.{LongType, TimestampType}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, TimestampType}
 import org.scalatest.concurrent.Eventually
 import org.scalatest.time.SpanSugar._
 
-/** Pins `Tables.parquet`: one schema inference per file version and conf
-  * key, reads identical to a plain `spark.read.parquet`, and the
+/** Pins the schema memo behind `Tables.table`: one schema inference per
+  * file version and conf key, reads identical to a plain
+  * `spark.read.parquet`, one file listing per read (stale or not), and the
   * row-group decision of `repartitionIfNarrow` following a rewrite.
   */
 class TablesSchemaMemoSpec extends SparkSpec with Eventually {
 
-  private def tmpPath(name: String): String =
-    Files.createTempDirectory("graft-memo").resolve(name).toString
+  /** A fresh table directory: `(sfDir, name)` for `Tables.table` and the
+    * table's own path. */
+  private def tmpTable(name: String): (String, String, String) = {
+    val dir = Files.createTempDirectory("graft-memo").toString
+    (dir, name, s"$dir/$name.parquet")
+  }
+
+  /** Leaf files `body` lists, as Spark's file-index metrics count them. */
+  private def filesListed(body: => Unit): Long = {
+    val before = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
+    body
+    HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount - before
+  }
 
   /** Spark jobs `body` launches on this thread, counted once a marker job
     * has come through the listener bus (events arrive in order). */
@@ -58,14 +72,45 @@ class TablesSchemaMemoSpec extends SparkSpec with Eventually {
   }
 
   test("a table overwritten at the same path is read with its new schema") {
-    val path = tmpPath("t")
+    val (dir, t, path) = tmpTable("t")
     spark.range(3).toDF("a").write.parquet(path)
-    assert(Tables.parquet(spark, path).columns.toSeq === Seq("a"))
-    assert(jobsOf(Tables.parquet(spark, path)) === 0)
+    assert(Tables.table(spark, dir, t).columns.toSeq === Seq("a"))
+    assert(jobsOf(Tables.table(spark, dir, t)) === 0)
     spark.range(3).selectExpr("id AS a", "id * 2 AS b").write.mode("overwrite").parquet(path)
-    val df = Tables.parquet(spark, path)
+    val df = Tables.table(spark, dir, t)
     assert(df.columns.toSeq === Seq("a", "b"))
+    assert(df.schema === spark.read.parquet(path).schema)
     assert(df.orderBy("a").collect().map(_.getLong(1)).toSeq === Seq(0L, 2L, 4L))
+  }
+
+  test("a stale read lists the files once, as a plain read does") {
+    val (dir, t, path) = tmpTable("t")
+    spark.range(0, 4, 1, 2).toDF("a").write.parquet(path)
+    Tables.table(spark, dir, t)
+    spark.range(0, 6, 1, 3).selectExpr("id AS a", "id * 2 AS b")
+      .write.mode("overwrite").parquet(path)
+    val plain = filesListed(spark.read.parquet(path))
+    assert(plain === 3)
+    var df: DataFrame = null
+    assert(filesListed { df = Tables.table(spark, dir, t) } === plain)
+    assert(df.columns.toSeq === Seq("a", "b"))
+    assert(jobsOf(Tables.table(spark, dir, t)) === 0, "the re-inferred schema is memoized")
+  }
+
+  test("a stale partitioned table reads its new partition types as a plain read does") {
+    val (dir, t, path) = tmpTable("p")
+    // string partition values first: the memoized read of the rewrite
+    // then succeeds, with every new value typed as the old string type
+    spark.range(4).selectExpr("id", "IF(id % 2 = 0, 'x', 'y') AS k")
+      .write.partitionBy("k").parquet(path)
+    assert(Tables.table(spark, dir, t).schema("k").dataType === StringType)
+    spark.range(4).selectExpr("id", "CAST(id % 2 AS INT) AS k")
+      .write.mode("overwrite").partitionBy("k").parquet(path)
+    val plain = spark.read.parquet(path)
+    val memo = Tables.table(spark, dir, t)
+    assert(memo.schema === plain.schema)
+    assert(memo.schema("k").dataType === IntegerType)
+    assert(memo.orderBy("id").collect().toSeq === plain.orderBy("id").collect().toSeq)
   }
 
   test("Tables.events yields the same TimestampType ts after nanosAsLong flips") {
@@ -127,12 +172,14 @@ class TablesSchemaMemoSpec extends SparkSpec with Eventually {
   }
 
   test("a partitioned read keeps its column order, partition types and filters") {
-    val path = tmpPath("part")
+    val (dir, t, path) = tmpTable("part")
     spark.range(20).selectExpr("id", "CAST(200001 + id % 4 AS INT) AS part_ym")
       .write.partitionBy("part_ym").parquet(path)
     val plain = spark.read.parquet(path)
-    sources.CuratedZone.readMonthRange(spark, path, 200002, 200003)
-    val memo = sources.CuratedZone.readMonthRange(spark, path, 200002, 200003)
+    def read(): DataFrame = Tables.table(spark, dir, t)
+      .filter(col("part_ym") >= 200002 && col("part_ym") <= 200003)
+    read()
+    val memo = read()
     assert(memo.schema === plain.schema)
     val filters = memo.queryExecution.sparkPlan.collect {
       case s: FileSourceScanExec => s.partitionFilters
@@ -143,41 +190,42 @@ class TablesSchemaMemoSpec extends SparkSpec with Eventually {
   }
 
   test("a missing path still throws PATH_NOT_FOUND, memoized or not") {
-    val e = intercept[AnalysisException](Tables.parquet(spark, tmpPath("absent")))
+    val (absentDir, absent, _) = tmpTable("absent")
+    val e = intercept[AnalysisException](Tables.table(spark, absentDir, absent))
     assert(e.getCondition === "PATH_NOT_FOUND")
-    val path = tmpPath("gone")
+    val (dir, t, path) = tmpTable("gone")
     spark.range(2).write.parquet(path)
-    Tables.parquet(spark, path)
+    Tables.table(spark, dir, t)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
-    val e2 = intercept[AnalysisException](Tables.parquet(spark, path))
+    val e2 = intercept[AnalysisException](Tables.table(spark, dir, t))
     assert(e2.getCondition === "PATH_NOT_FOUND")
   }
 
   test("repartitionIfNarrow follows a table rewritten at the same path") {
-    val path = tmpPath("rg")
+    val (dir, t, path) = tmpTable("rg")
     def widened(df: DataFrame): Boolean =
       Tables.repartitionIfNarrow(df).queryExecution.analyzed
         .collect { case r: Repartition => r }.nonEmpty
     val rows = spark.range(0, 4000, 1, 1).selectExpr("id", "repeat(CAST(id AS STRING), 8) AS s")
     rows.write.parquet(path)
-    assert(widened(Tables.parquet(spark, path)), "one row group is narrow")
+    assert(widened(Tables.table(spark, dir, t)), "one row group is narrow")
     rows.write.mode("overwrite").option("parquet.block.size", 4096).parquet(path)
-    assert(!widened(Tables.parquet(spark, path)), "many row groups are wide")
+    assert(!widened(Tables.table(spark, dir, t)), "many row groups are wide")
   }
 
-  test("single-path parquet reads under src/main go through Tables.parquet") {
+  test("corpus tables under src/main are read only through Tables.table") {
     val needle = "read" + ".parquet("
     val root = new java.io.File("src/main")
     assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
     def files(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
     val sites = files(root).filter(_.getName.endsWith(".scala"))
-      .filterNot(f => Set("Tables.scala", "ScaleProbe.scala")(f.getName))
+      .filterNot(_.getName == "Tables.scala")
       .flatMap { f =>
         scala.util.Using.resource(scala.io.Source.fromFile(f, "UTF-8"))(_.getLines().toList)
-          .filter(_.contains(needle)).map(l => s"${f.getName}: ${l.trim}")
+          .filter(l => l.contains(needle) && l.contains("$sfDir/"))
+          .map(l => s"${f.getName}: ${l.trim}")
       }
-    assert(sites === Seq(
-      "Maintenance.scala: spark.read.parquet(rewrite.map(_.getPath).toIndexedSeq: _*)"))
+    assert(sites.isEmpty)
   }
 }
