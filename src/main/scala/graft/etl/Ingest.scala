@@ -1,5 +1,10 @@
 package graft.etl
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.UUID
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,6 +19,11 @@ import org.apache.spark.sql.functions._
   * same contract is metadata stamped as literal columns at ingest — they
   * travel with the data, survive any downstream transform, and cost nothing
   * (constant columns compress to near-zero in any columnar sink).
+  *
+  * The payload is one bounded body the driver already holds, so it is
+  * parsed on the driver by Spark's own JSON inference and parser
+  * ([[Ndjson.parseLocal]]): uploading an object and reading its metadata
+  * back launch no Spark job.
   */
 object Ingest {
 
@@ -28,8 +38,7 @@ object Ingest {
       spark: SparkSession,
       content: String,
       metadata: Map[String, String] = Map.empty): DataFrame = {
-    import spark.implicits._
-    val parsed = Ndjson.parse(spark, content.linesIterator.toSeq.toDS())
+    val parsed = Ndjson.parseLocal(spark, content.linesIterator.toSeq)
     metadata.foldLeft(parsed) { case (df, (k, v)) =>
       df.withColumn(s"$MetadataPrefix$k", lit(v))
     }
@@ -43,6 +52,13 @@ object Ingest {
     * streaming file source consumes, with the key as the routing basename.
     * (Bulk data takes the distributed writers; this is the control-plane
     * ingest path.)
+    *
+    * The rendering is a projection over the parsed local relation, which
+    * the optimizer folds, so `collect` launches no job. The object is
+    * written to a hidden sibling (`.<name>.tmp-<uuid>`, which the file
+    * source skips) and renamed into place atomically: a drain listing the
+    * landing dir meanwhile sees the whole object or none of it, never a
+    * prefix that its checkpoint would then mark as consumed.
     */
   def uploadSourceObject(
       spark: SparkSession,
@@ -50,15 +66,22 @@ object Ingest {
       key: String,
       content: String,
       metadata: Map[String, String] = Map.empty): Unit = {
-    val lines = fromContent(spark, content, metadata).toJSON.collect()
-    val path = java.nio.file.Paths.get(landingDir, key)
-    java.nio.file.Files.createDirectories(path.getParent)
-    java.nio.file.Files.writeString(path, lines.mkString("\n") + "\n")
+    val lines = fromContent(spark, content, metadata)
+      .select(to_json(struct(col("*")))).collect().map(_.getString(0))
+    val path = Paths.get(landingDir, key)
+    Files.createDirectories(path.getParent)
+    val tmp = path.resolveSibling(s".${path.getFileName}.tmp-${UUID.randomUUID()}")
+    try {
+      Files.writeString(tmp, lines.mkString("\n") + "\n")
+      Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
   }
 
-  /** Read back the metadata of a landed object — the HeadObject twin. */
+  /** Read back the metadata of a landed object — the HeadObject twin.
+    * Parses the object on the driver, as the upload did: no Spark job. */
   def readMetadata(spark: SparkSession, landingDir: String, key: String): Map[String, String] = {
-    val df = spark.read.json(s"$landingDir/$key")
+    val lines = Files.readAllLines(Paths.get(landingDir, key)).asScala.toSeq
+    val df = Ndjson.parseLocal(spark, lines)
     val metaCols = df.columns.filter(_.startsWith(MetadataPrefix))
     if (metaCols.isEmpty) Map.empty
     else {

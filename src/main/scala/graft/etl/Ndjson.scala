@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.graft.JsonBridge
 import org.apache.spark.sql.types.StructType
 
 /** NDJSON source/sink — the reference's storage format.
@@ -22,27 +23,28 @@ import org.apache.spark.sql.types.StructType
 object Ndjson {
   val CorruptCol = "_corrupt_record"
 
+  /** The reader options of every NDJSON read here, batch or streaming. */
+  val ReadOptions: Map[String, String] =
+    Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> CorruptCol)
+
   /** Ad-hoc read with schema inference (reference's dynamic-schema mode). */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CorruptCol)
-      .json(path)
+    spark.read.options(ReadOptions).json(path)
 
   /** Production read: explicit schema, single pass, stable plan. */
   def readWithSchema(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read
-      .schema(schema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CorruptCol)
-      .json(path)
+    spark.read.schema(schema).options(ReadOptions).json(path)
 
   /** Parse an already-loaded string Dataset (e.g. a raw `text` scan). */
   def parse(spark: SparkSession, lines: org.apache.spark.sql.Dataset[String]): DataFrame =
-    spark.read
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", CorruptCol)
-      .json(lines)
+    spark.read.options(ReadOptions).json(lines)
+
+  /** [[parse]] over lines the driver already holds: the same schema and
+    * rows, parsed in the calling thread by Spark's own JSON code
+    * ([[JsonBridge]]), as a local relation. Launches no Spark job.
+    */
+  def parseLocal(spark: SparkSession, lines: Seq[String]): DataFrame =
+    JsonBridge.parse(spark, lines, ReadOptions)
 
   /** The reference's output-key rule: `transformed/{source_key}`
     * (`glue/job.py:19`). Pure path arithmetic.

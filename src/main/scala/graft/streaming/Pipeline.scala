@@ -1,7 +1,11 @@
 package graft.streaming
 
+import java.util.UUID
+
 import graft.etl.{Enrich, Ndjson}
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -20,8 +24,10 @@ import org.apache.spark.sql.types.StructType
   *    model, with checkpointed exactly-once instead of Lambda at-least-once.
   *  - Per-object output routing (`transformed/{source_key}`,
   *    `glue/job.py:19`; metadata-hint bucket, `lambda/handler.ts:46-48`)
-  *    becomes `foreachBatch` partitioning by source file, under a caller-
-  *    resolved output root.
+  *    becomes one `foreachBatch` write partitioned by source file into a
+  *    hidden staging dir, then a per-object publish: each partition dir is
+  *    renamed to `transformed/{source_key}` under a caller-resolved output
+  *    root. A micro-batch costs one Spark job however many objects it holds.
   *  - Fire-and-forget dispatch + job-run polling (`src/aws/
   *    lambda.service.ts:25-49`, `src/aws/glue.service.ts:53-62`) becomes a
   *    non-blocking `query.start()` whose handle registers in [[JobRegistry]]
@@ -39,7 +45,10 @@ object Pipeline {
 
   /** Drain the landing dir once (AvailableNow), enriching each NDJSON object
     * and writing per-source-file NDJSON under `transformed/` — the
-    * reference's full data path, distributed.
+    * reference's full data path, distributed. Each micro-batch is written
+    * once, partitioned by object, to `<outputRoot>/_staging/<run>/<batch>`;
+    * each object's dir then replaces `<root>/transformed/<key>` and gets
+    * its `_SUCCESS`.
     *
     * @param resolveOutputRoot maps a source file name to its output root —
     *   the Spark form of the reference's per-object
@@ -69,8 +78,7 @@ object Pipeline {
     val resolve = resolveOutputRoot.getOrElse((_: String) => outputRoot)
     val reader = spark.readStream
       .schema(schema.add(Ndjson.CorruptCol, "string"))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", Ndjson.CorruptCol)
+      .options(Ndjson.ReadOptions)
     val admitted = maxBytesPerTrigger match {
       case Some(b) => reader.option("maxBytesPerTrigger", b.toString)
       case None    => reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -85,25 +93,58 @@ object Pipeline {
       .withColumn("__src", expr(
         "url_decode(replace(element_at(split(input_file_name(), '/'), -1), '+', '%2B'))"))
 
+    // one staging dir per run, one child per micro-batch; the leading
+    // '_' hides it from every Spark reader of the output root
+    val staging = new Path(outputRoot, s"_staging/${UUID.randomUUID()}")
     val query = in.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val enriched = Enrich.enrich(batch.drop(Ndjson.CorruptCol))
-        // group rows by originating object; each group writes to
-        // <resolvedRoot>/transformed/<source_key> (glue/job.py:19 rule).
-        // The collect only returns the batch's source keys, but it computes
-        // them with a row scan of the batch plus a shuffle for the distinct:
-        // 2 of the 5 Spark jobs of each drained round.
-        val srcs = enriched.select("__src").distinct().collect().map(_.getString(0))
-        srcs.foreach { src =>
-          enriched.filter(col("__src") === src).drop("__src")
-            .write.mode("overwrite")
-            .json(s"${resolve(src)}/${Ndjson.transformedKey(src)}")
-        }
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val staged = new Path(staging, batchId.toString)
+        try {
+          // the batch's only Spark job: one write, partitioned by object
+          Enrich.enrich(batch.drop(Ndjson.CorruptCol))
+            .write.mode("overwrite").partitionBy("__src").json(staged.toString)
+          publish(spark, staged, resolve)
+        } finally dropStaging(spark, staging)
       }
       .start()
     JobRegistry.register(query)
     query
+  }
+
+  /** Move each object's staged output to `<resolve(key)>/transformed/<key>`,
+    * replacing what an earlier drain published there (the overwrite a
+    * per-object write did), and mark it committed with `_SUCCESS`. Keys
+    * come back from the `__src=` partition dirs, so only objects that
+    * produced rows publish. A root on another filesystem gets a copy.
+    */
+  private def publish(spark: SparkSession, staged: Path, resolve: String => String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = staged.getFileSystem(conf)
+    fs.listStatus(staged)
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("__src="))
+      .foreach { dir =>
+        val key = ExternalCatalogUtils.unescapePathName(dir.getPath.getName.stripPrefix("__src="))
+        val dst = new Path(s"${resolve(key)}/${Ndjson.transformedKey(key)}")
+        val dstFs = dst.getFileSystem(conf)
+        dstFs.delete(dst, true)
+        dstFs.mkdirs(dst.getParent)
+        val moved =
+          if (dstFs.getUri == fs.getUri) fs.rename(dir.getPath, dst)
+          else FileUtil.copy(fs, dir.getPath, dstFs, dst, true, conf)
+        if (!moved) throw new java.io.IOException(s"could not publish ${dir.getPath} to $dst")
+        dstFs.create(new Path(dst, "_SUCCESS"), true).close()
+      }
+  }
+
+  /** Delete this run's staging dir, and `_staging` itself once no other
+    * run stages under it. */
+  private def dropStaging(spark: SparkSession, staging: Path): Unit = {
+    val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(staging, true)
+    val parent = staging.getParent
+    try if (fs.exists(parent) && fs.listStatus(parent).isEmpty) fs.delete(parent, false)
+    catch { case _: java.io.IOException => () } // another run staged meanwhile
   }
 }

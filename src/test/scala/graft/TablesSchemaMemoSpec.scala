@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.Files
 import java.time.Instant
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
 import org.apache.hadoop.fs.Path
@@ -12,21 +10,18 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.metrics.source.HiveCatalogMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, TimestampType}
-import org.scalatest.concurrent.Eventually
-import org.scalatest.time.SpanSugar._
 
 /** Pins the schema memo behind `Tables.table`: one schema inference per
   * file version and conf key, reads identical to a plain
   * `spark.read.parquet`, one file listing per read (stale or not), and the
   * row-group decision of `repartitionIfNarrow` following a rewrite.
   */
-class TablesSchemaMemoSpec extends SparkSpec with Eventually {
+class TablesSchemaMemoSpec extends JobCounting {
 
   /** A fresh table directory: `(sfDir, name)` for `Tables.table` and the
     * table's own path. */
@@ -40,29 +35,6 @@ class TablesSchemaMemoSpec extends SparkSpec with Eventually {
     val before = HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount
     body
     HiveCatalogMetrics.METRIC_FILES_DISCOVERED.getCount - before
-  }
-
-  /** Spark jobs `body` launches on this thread, counted once a marker job
-    * has come through the listener bus (events arrive in order). */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val groups = new ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("<none>"))
-    }
-    val id = java.util.UUID.randomUUID()
-    val (group, marker) = (s"measured-$id", s"marker-$id")
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "listener marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      eventually(timeout(30.seconds))(assert(groups.contains(marker)))
-      groups.asScala.count(_ == group)
-    } finally sc.removeSparkListener(listener)
   }
 
   test("building sql_q6 a second time launches no Spark job") {
