@@ -35,10 +35,11 @@ object Etl {
     UploadResult(landingDir, key)
   }
 
-  /** Land `content` and drain the landing zone into `outputRoot` (or the
-    * per-object metadata hint, mirroring `pipeline-output-bucket`).
-    * Blocking by default (AvailableNow drain); the returned run id is
-    * poll-able either way.
+  /** Land `content` and drain the landing zone: every object lands under
+    * `outputRoot`. Nothing reads a `pipeline-output-bucket` metadata hint
+    * here; per-object routing is [[Pipeline.run]]'s `resolveOutputRoot`
+    * over the key. Blocking by default (AvailableNow drain); the returned
+    * run id is poll-able either way.
     */
   def runPipeline(
       spark: SparkSession,

@@ -106,8 +106,7 @@ object ConnectedComponents {
 
   /** Contraction rounds of the most recent components() call in this JVM
     * — diagnostic observability for the scaling probe (`graft.ScaleProbe`,
-    * SCALING.md's measured round counts; same test-hook pattern as
-    * `LandingSource.payloadReads`). Not part of the query contract.
+    * SCALING.md's measured round counts). Not part of the query contract.
     */
   val lastRounds = new java.util.concurrent.atomic.AtomicInteger(0)
 

@@ -18,7 +18,10 @@ import org.apache.spark.sql.types.StructType
   *    directory. Unlike the reference — which silently drops all but
   *    `Records[0]` of a multi-record event (`lambda/handler.ts:35`, a bug we
   *    deliberately do NOT replicate) — the file source processes every
-  *    arrival exactly once, tracked by the checkpoint.
+  *    new path exactly once, tracked by the checkpoint. It remembers seen
+  *    files by path alone, so a key uploaded again into the same landing
+  *    dir is not drained again on the same checkpoint (CHANGES.md
+  *    `FOUND:` on re-uploads).
   *  - `Trigger.AvailableNow` ≈ "drain whatever has arrived, then stop" —
   *    the batch-like semantics of the reference's one-Lambda-per-object
   *    model, with checkpointed exactly-once instead of Lambda at-least-once.
@@ -35,11 +38,12 @@ import org.apache.spark.sql.types.StructType
   *    Lambda request id, forcing users to fish the run id out of logs,
   *    `README.md:87`), `run` returns the real run handle.
   *
-  * Scale: the file source lists incrementally and processes files in
-  * parallel; `maxFilesPerTrigger` bounds batch size. State (checkpoint) is
-  * per-query, so one pipeline per landing prefix mirrors the reference's
-  * `maxConcurrentRuns: 1` (`infra/index.ts:178-180`) without serializing
-  * distinct pipelines.
+  * Scale: every trigger lists the whole landing dir and then drops the
+  * files it has already seen, so listing costs O(objects) per trigger.
+  * Files are processed in parallel; `maxFilesPerTrigger` bounds batch
+  * size. State (checkpoint) is per-query, so one pipeline per landing
+  * prefix mirrors the reference's `maxConcurrentRuns: 1`
+  * (`infra/index.ts:178-180`) without serializing distinct pipelines.
   */
 object Pipeline {
 

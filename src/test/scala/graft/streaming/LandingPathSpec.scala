@@ -19,7 +19,7 @@ class LandingPathSpec extends JobCounting {
 
   private val schema = new StructType().add("id", LongType).add("name", StringType)
 
-  private def tmp(): String = Files.createTempDirectory("graft-landing").toString
+  private def tmp(): String = Files.createTempDirectory("graft-land").toString
 
   private def payload(ids: Range): String =
     ids.map(i => s"""{"id":$i,"name":"n$i"}""").mkString("\n", "\n\n", "\n")

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.etl.Etl
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -92,6 +93,13 @@ class PipelineSpec extends SparkSpec {
     Pipeline.run(spark, landing, out, schema, ckpt).awaitTermination()
     assert(new java.io.File(s"$out/transformed/x.json").lastModified() === mtime,
       "second drain must not rewrite an already-processed object")
+    // a new arrival is the only thing the next drain processes
+    Etl.upload(spark, landing, "y.json", "{\"name\":\"y\",\"id\":2}\n")
+    Pipeline.run(spark, landing, out, schema, ckpt).awaitTermination()
+    assert(spark.read.json(s"$out/transformed/y.json")
+      .head().getAs[String]("uppercase_name") === "Y")
+    assert(new java.io.File(s"$out/transformed/x.json").lastModified() === mtime,
+      "the new-arrival drain must not reprocess older objects")
   }
 }
 

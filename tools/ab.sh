@@ -50,7 +50,7 @@ done
 # run <side> <tree>: one Scratch JVM; appends "<side> <round> <query> <min-of-3>"
 run() {
   local side="$1" tree="$2"
-  if ! java -cp "$tree/target/scala-2.13/classes:$tree/src/main/resources:/opt/spark/jars/*" \
+  if ! java -cp "$tree/target/scala-2.13/classes:/opt/spark/jars/*" \
       "${OPENS[@]}" graft.Scratch "$QUERIES" > "$WORK/out" 2> "$WORK/err"; then
     tail -20 "$WORK/err"; echo "ab: side $side failed in round $ROUND" >&2; exit 1
   fi

@@ -50,7 +50,7 @@ JAVA_OPTS=(
   --add-opens=java.base/sun.security.action=ALL-UNNAMED
   --add-opens=java.base/sun.util.calendar=ALL-UNNAMED
 )
-RUN="java -cp target/scala-2.13/classes:src/main/resources:/opt/spark/jars/* ${JAVA_OPTS[*]}"
+RUN="java -cp target/scala-2.13/classes:/opt/spark/jars/* ${JAVA_OPTS[*]}"
 
 step "graft.Verify @ $VERIFY_SF"
 if ! SPARK_GRAFT_CPUS="$CPUS" $RUN graft.Verify "$VERIFY_SF" "$OUT/verify" \
